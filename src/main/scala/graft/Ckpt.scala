@@ -17,6 +17,9 @@ import org.apache.spark.sql.DataFrame
   */
 object Ckpt {
 
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.Ckpt")
+  private val unresolvedCount = new java.util.concurrent.atomic.AtomicLong
+
   /** The checkpointed RDD behind `df`, or None when `df` is not a
     * bare checkpoint result (callers then free nothing — never a
     * stranger's blocks).
@@ -27,7 +30,28 @@ object Ckpt {
       case _ => None
     }
 
+  /** [[rddOf]] for the OWNER of a checkpoint, which must free its blocks
+    * later: None there means the blocks stay cached until the context
+    * stops, so it is warned about and counted ([[unresolved]]), never
+    * silent. `site` names the caller in the warning.
+    */
+  def ownedRdd(df: DataFrame, site: String)
+      : Option[org.apache.spark.rdd.RDD[_]] = {
+    val r = rddOf(df)
+    if (r.isEmpty) {
+      unresolvedCount.incrementAndGet()
+      log.warn(s"$site: the checkpointed frame's plan is not a LogicalRDD; " +
+        "its blocks cannot be freed and stay cached until the context stops")
+    }
+    r
+  }
+
+  /** Process-wide count of checkpoints whose RDD [[ownedRdd]] could not
+    * resolve — each one leaked its blocks.
+    */
+  def unresolved: Long = unresolvedCount.get
+
   /** Unpersist exactly `df`'s own checkpointed blocks (async). */
   def free(df: DataFrame): Unit =
-    rddOf(df).foreach(_.unpersist(blocking = false))
+    ownedRdd(df, "Ckpt.free").foreach(_.unpersist(blocking = false))
 }

@@ -1604,7 +1604,7 @@ object Text {
     // sweep up a concurrent caller's checkpoint landing in the window
     def checkpoint(df: DataFrame): (DataFrame, Set[Int]) = {
       val out = df.localCheckpoint()
-      (out, graft.Ckpt.rddOf(out).map(_.id).toSet)
+      (out, graft.Ckpt.ownedRdd(out, "CC loop checkpoint").map(_.id).toSet)
     }
     def free(ids: Set[Int]): Unit =
       ids.foreach(id =>

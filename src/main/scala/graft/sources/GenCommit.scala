@@ -133,6 +133,8 @@ object GenCommit {
     * invisible and, by partition pruning, unread. THE protocol reader,
     * shared by all three standing indexes so their read semantics
     * cannot diverge (review r14).
+    * The schema is read from one footer on the driver
+    * ([[ParquetSchema]]), so building the frame runs no job.
     */
   def committedTable(spark: SparkSession, indexDir: String,
       table: String, asOf: Option[Long] = None)
@@ -140,7 +142,7 @@ object GenCommit {
     val gens = committedAsOf(spark, indexDir, asOf)
     require(gens.nonEmpty,
       s"no committed generations at $indexDir — build the index first")
-    spark.read.parquet(s"$indexDir/$table")
+    ParquetSchema.read(spark, s"$indexDir/$table")
       .filter(org.apache.spark.sql.functions.col("gen").isin(gens: _*))
   }
 

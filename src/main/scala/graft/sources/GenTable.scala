@@ -383,7 +383,7 @@ object GenTable {
       staged: String, bloomCols: Seq[String]): Unit = {
     if (bloomCols.isEmpty) return
     graft.ext.GraftFunctions.ensureBloom(spark)
-    val df = spark.read.parquet(staged)
+    val df = ParquetSchema.read(spark, staged)
     bloomCols.foreach(c => require(df.columns.contains(c),
       s"GenTable: bloom column $c is not in the table " +
         s"(${df.columns.mkString(", ")})"))
@@ -453,11 +453,11 @@ object GenTable {
     val nb = 1 << ZBits
     val recorded = GenCommit.readSmallFile(f, p)
     if (recorded.nonEmpty) {
-      // a torn/truncated record (a writer crashed mid-create, or a
-      // concurrent disjoint-partition writer was read mid-write) must
-      // fall through to the recompute-and-overwrite self-repair, never
-      // crash the statement (review r20) — hence the Try around the
-      // whole parse, not just the well-formedness check below
+      // a torn/truncated record (left by a writer that predates the
+      // temp + rename write below) must fall through to the recompute-
+      // and-overwrite self-repair, never crash the statement — hence
+      // the Try around the whole parse, not just the well-formedness
+      // check below
       val byCol = scala.util.Try(
         recorded.split("\n").toIndexedSeq.map { line =>
           val parts = line.split("\t", -1)
@@ -480,10 +480,20 @@ object GenTable {
     val lines = statsCols.zip(bounds).map { case (c, bs) =>
       enc(c) + "\t" + bs.map(java.lang.Double.toString).mkString(",")
     }
-    val o = f.create(p, true)
+    // temp + rename: a writer that dies mid-write leaves only a hidden
+    // temp file, never a torn record. Hadoop's rename refuses an existing
+    // destination, so a stale record is dropped first — a reader in that
+    // window finds no record and recomputes, which is never wrong
+    val tmp = new org.apache.hadoop.fs.Path(
+      s"$dir/.zbounds.tmp_${GenCommit.newToken()}")
+    val o = f.create(tmp, true)
     try o.write(lines.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally o.close()
+    if (!f.rename(tmp, p)) {
+      f.delete(p, false)
+      if (!f.rename(tmp, p)) f.delete(tmp, false)
+    }
     bounds
   }
 
@@ -525,7 +535,7 @@ object GenTable {
   private def writeFileStats(spark: SparkSession, dir: String, gen: Long,
       staged: String, statsCols: Seq[String]): Unit = {
     if (statsCols.isEmpty) return
-    val df = spark.read.parquet(staged)
+    val df = ParquetSchema.read(spark, staged)
     statsCols.foreach(c => require(df.columns.contains(c),
       s"GenTable: stats column $c is not in the table " +
         s"(${df.columns.mkString(", ")})"))
@@ -718,7 +728,7 @@ object GenTable {
     // empty.reduce (review r15); compact keeps older generation dirs
     // around in that state as the schema carriers
     if (resolved.isEmpty)
-      return spark.read.parquet(s"$dir/data")
+      return ParquetSchema.read(spark, s"$dir/data")
         .filter(lit(false)).drop("gen")
     val df = readPinned(spark, dir, partCol, resolved, Nil)
     val cond = resolveCond(resolved, partCol, df.schema(partCol).dataType)
@@ -795,9 +805,10 @@ object GenTable {
     * metadata work per read. The newest resolved generation carries the
     * widest schema by Merge's add-only evolution contract, and parquet
     * null-fills pinned columns absent from older files — exactly
-    * upsert's null-fill semantics, for free. One extra footer read per
-    * query (driver-side). `paths` non-empty = [[readWhere]]'s explicit
-    * file list (read with basePath so partition columns survive).
+    * upsert's null-fill semantics, for free. The pin costs one footer
+    * read per query, on the driver ([[pinnedSchema]]). `paths` non-empty
+    * = [[readWhere]]'s explicit file list (read with basePath so
+    * partition columns survive).
     */
   private def readPinned(spark: SparkSession, dir: String,
       partCol: String, resolved: Seq[(Long, Seq[String])],
@@ -818,30 +829,43 @@ object GenTable {
     * reordered as (payload…, gen, partCol). `None` only when no resolved
     * generation carries a file (the all-emptied view — callers fall back
     * to the unpinned empty read).
+    *
+    * Cost: one directory walk to find that generation's first parquet
+    * file, then its footer read on the DRIVER ([[ParquetSchema.ofFile]])
+    * — no Spark job. The partition column's type comes from the `partcol`
+    * record; a table without one (pre-r19) takes the type Spark infers
+    * from the directory names, which a schema-carrying read resolves on
+    * the driver too.
     */
   private[sources] def pinnedSchema(spark: SparkSession, dir: String,
       partCol: String, resolved: Seq[(Long, Seq[String])])
       : Option[org.apache.spark.sql.types.StructType] = {
     val f = fsOf(spark, dir)
-    def hasParquet(g: Long): Boolean = {
+    def firstParquet(g: Long): Option[org.apache.hadoop.fs.FileStatus] = {
       val p = new org.apache.hadoop.fs.Path(s"$dir/data/gen=$g")
-      if (!f.exists(p)) return false
+      if (!f.exists(p)) return None
       val it = f.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
+      var found = Option.empty[org.apache.hadoop.fs.FileStatus]
+      while (found.isEmpty && it.hasNext) {
+        val s = it.next()
+        if (s.getPath.getName.endsWith(".parquet")) found = Some(s)
+      }
       found
     }
-    resolved.map(_._1).sorted.reverse.find(hasParquet)
-      .map { g =>
-        val base = spark.read.parquet(s"$dir/data/gen=$g").schema
+    resolved.map(_._1).sorted.reverse.iterator
+      .flatMap(g => firstParquet(g).map(g -> _)).nextOption()
+      .map { case (g, file) =>
+        val genDir = s"$dir/data/gen=$g"
+        // schema merging requested: Spark's own inference, as before
+        val base = ParquetSchema.ofFile(spark, file)
+          .getOrElse(spark.read.parquet(genDir).schema)
         // the partition column's type comes from the RECORD when one
         // exists (r19): directory-name inference narrows a bigint key
         // whose current values fit int, and could flip across commits
         val pf = partColTypeOf(spark, dir) match {
           case Some(dt) =>
             org.apache.spark.sql.types.StructField(partCol, dt)
-          case None => base(partCol)
+          case None => spark.read.schema(base).parquet(genDir).schema(partCol)
         }
         org.apache.spark.sql.types.StructType(
           base.fields.filterNot(_.name == partCol).toIndexedSeq :+
@@ -878,7 +902,7 @@ object GenTable {
     val pinned = pinnedSchema(spark, dir, partCol, resolved)
     def emptyView = (pinned match {
       case Some(sch) => spark.read.schema(sch).parquet(s"$dir/data")
-      case None => spark.read.parquet(s"$dir/data")
+      case None => ParquetSchema.read(spark, s"$dir/data")
     }).filter(lit(false)).drop("gen")
     if (resolved.isEmpty || pinned.isEmpty) return emptyView
     val sdt = pinned.get(statsCol).dataType
@@ -915,7 +939,7 @@ object GenTable {
     val pinned = pinnedSchema(spark, dir, partCol, resolved)
     def emptyView = (pinned match {
       case Some(sch) => spark.read.schema(sch).parquet(s"$dir/data")
-      case None => spark.read.parquet(s"$dir/data")
+      case None => ParquetSchema.read(spark, s"$dir/data")
     }).filter(lit(false)).drop("gen")
     if (resolved.isEmpty || pinned.isEmpty) return emptyView
     val kdt = pinned.get(keyCol).dataType
@@ -1486,8 +1510,12 @@ object GenTable {
     // mismatched source must not pay a full materialization first. The
     // pre-claim column set is advisory (a concurrent evolve could widen
     // it); the authoritative check re-runs against the claimed snapshot
-    // below.
-    val preCols = read(spark, dir, partCol).columns.toSeq
+    // below. The columns come from the pinned schema — what [[read]]
+    // would show, without planning the tombstone mask; only an
+    // all-emptied view (no pin) builds the read itself.
+    val preCols = pinnedSchema(spark, dir, partCol, claims(spark, dir, None))
+      .map(_.fieldNames.toSeq.filterNot(_ == "gen"))
+      .getOrElse(read(spark, dir, partCol).columns.toSeq)
     require(preCols.toSet == rowsIn.columns.toSet,
       s"insertRows: the rows must carry exactly the table's columns " +
         s"(${preCols.mkString(", ")}); got " +
@@ -1504,7 +1532,10 @@ object GenTable {
     // freed in the finally below via the frame's OWN LogicalRDD
     // (review r20 — a global getPersistentRDDs diff would sweep up a
     // concurrent statement's checkpoint and destroy its only copy).
-    val rows = rowsIn.localCheckpoint()
+    // The checkpoint is LAZY: the touched-partition job below computes
+    // the source and stores its blocks, so no statement pays a separate
+    // checkpoint job, and an empty source returns after that one job.
+    val rows = rowsIn.localCheckpoint(eager = false)
     try {
       val touched = rows.select(col(partCol)).distinct()
         .collect().map(_.get(0)).toSeq

@@ -136,7 +136,7 @@ object RatesDim {
         rebased.toDF("currency", "rate")
           .coalesce(1).write.mode("overwrite").parquet(path)
       }
-      spark.read.parquet(path)
+      ParquetSchema.read(spark, path)
     }
 
     /** Rates ready for the conversion join: broadcast-hinted. */

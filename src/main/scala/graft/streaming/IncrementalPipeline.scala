@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ops.Convert
+import graft.sources.ParquetSchema
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -32,6 +33,13 @@ import java.sql.Timestamp
   * stays O(processed ids); compact it periodically (or age it out once
   * source partitions are immutable-and-complete) exactly like any
   * streaming state store.
+  *
+  * Fixed per-batch costs: an hourly batch is at most 30,000 rows, so its
+  * latency is set by per-operation overhead, not data volume. The
+  * source, ledger and target frames take their schemas from one footer
+  * read on the driver ([[graft.sources.ParquetSchema]]) rather than the
+  * one-task inference job a schema-less `spark.read.parquet` launches:
+  * building them costs file listings and one footer read each, no job.
   */
 object IncrementalPipeline {
 
@@ -62,10 +70,10 @@ object IncrementalPipeline {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def readParquetOrEmpty(spark: SparkSession, dir: String, like: DataFrame): DataFrame = {
+  private[graft] def readParquetOrEmpty(spark: SparkSession, dir: String, like: DataFrame): DataFrame = {
     val (fs, p) = fsFor(spark, dir)
     if (fs.exists(p))
-      spark.read.parquet(dir)
+      ParquetSchema.read(spark, dir)
     else
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         like.schema)
@@ -110,7 +118,7 @@ object IncrementalPipeline {
       // default stays the reference-exact divide form
       convert: (DataFrame, DataFrame, Timestamp) => DataFrame = convertBatch): BatchResult = {
     recoverLedger(spark, ledgerDir) // repair an interrupted compaction swap
-    val source = spark.read.parquet(sourceDir)
+    val source = ParquetSchema.read(spark, sourceDir)
     val ledger = readParquetOrEmpty(spark, ledgerDir,
       source.select(col("order_id"), lit(batchTs).as("processed_at")))
 
@@ -161,11 +169,12 @@ object IncrementalPipeline {
     // size from filesystem METADATA, not a count() job — a billions-of-ids
     // ledger should not be scanned twice per compaction. Target ~128 MB of
     // parquet per output file; ≥2 files so compaction never regresses to
-    // the single-task/single-file shape
+    // the single-task/single-file shape. The schema, likewise, is one
+    // driver-side footer read: the rewrite is the compaction's only job
     val bytes = fs.getContentSummary(dir).getLength
     val nFiles = math.max(2, math.min(spark.sparkContext.defaultParallelism,
       (bytes / (128L << 20)).toInt + 1))
-    compactionLayout(spark.read.parquet(ledgerDir), nFiles)
+    compactionLayout(ParquetSchema.read(spark, ledgerDir), nFiles)
       .write.mode("overwrite").parquet(tmp.toString)
     require(fs.rename(dir, bak), s"could not move $ledgerDir aside")
     require(fs.rename(tmp, dir), s"could not activate compacted ledger; " +
@@ -201,7 +210,7 @@ object IncrementalPipeline {
   def targetView(spark: SparkSession, targetDir: String): DataFrame = {
     val w = Window.partitionBy(col("order_id"))
       .orderBy(asc("processed_at"), asc("exchange_rate_date"))
-    spark.read.parquet(targetDir)
+    ParquetSchema.read(spark, targetDir)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn")
