@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver-run → BENCH_r{N}.json).
   *
@@ -28,19 +27,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // scale-correct session_window plan: merge sessions inside each map
-      // partition before the shuffle, so partial SESSIONS shuffle instead
-      // of raw events (matters at 100 TB; measured ~15% at sf0.1 on q42)
-      .config("spark.sql.sessionWindow.merge.sessions.in.local.partition", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cpus)
     // Untimed warmup: absorb one-off session cost (first parquet read,
     // codegen compiler, shuffle service spin-up) so per-query numbers
     // measure the plan, not JVM warmup, and stay comparable across rounds.

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.time.LocalDate
 
 /** Runnable end-to-end of the reference's whole lifecycle on this engine:
@@ -14,14 +13,7 @@ import java.time.LocalDate
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
 
     val root = TempRoots.create("graft_demo_")
     val (src, tgt, led) = (s"$root/orders", s"$root/orders_eur", s"$root/ledger")

@@ -98,13 +98,7 @@ object ScaleUp {
     // (see [[derive]]'s hotPct doc). 0 (default) = the uniform derivation.
     val hotPct = sys.env.getOrElse("SPARK_GRAFT_SCALE_HOT", "0").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cpus)
     derive(spark, src, out, copies, hotPct)
     println(s"""{"metric":"scaleup","copies":$copies,"hot":$hotPct,"src":"$src","out":"$out"}""")
     spark.stop()

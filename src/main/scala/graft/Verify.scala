@@ -7,18 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep the oracle-checked session_window plan identical to the
-      // benched one (local partial-session merge before the shuffle)
-      .config("spark.sql.sessionWindow.merge.sessions.in.local.partition", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cpus)
     dump(spark, sfDir, outDir)
     spark.stop()
   }

@@ -35,9 +35,9 @@ import org.apache.spark.sql.functions._
   *    snapshot+1 and the loser fails loudly).
   *  - [[compact]] folds history into one generation when the
   *    changed-row tail outweighs the read's latest-wins shuffle —
-  *    [[Text.lshCompact]]'s crash-safe SwapDir recipe, same keepGen
-  *    id semantics (stale pins fail loudly, the surviving pin keeps
-  *    its meaning).
+  *    [[graft.sources.StandingStore]]'s crash-safe compaction, same
+  *    keepGen id semantics as every standing index (stale pins fail
+  *    loudly, the surviving pin keeps its meaning).
   *
   * Scale shape: the nightly WRITE is the changed set (delta-
   * proportional); the nightly READ inside [[merge]] is one scan of the
@@ -53,20 +53,22 @@ import org.apache.spark.sql.functions._
   */
 object ClusterStore {
 
-  private val Tables1 = Seq("labels")
+  /** The store's lifecycle: one labels table, no tombstone table (a
+    * [[remove]] is a null-comp label row), compaction persists [[read]]'s
+    * latest-wins view.
+    */
+  private val Store = graft.sources.StandingStore("cluster store", "init",
+    Seq("labels"), scanTables = Seq("labels"),
+    fold = (spark, dir, _) =>
+      graft.sources.StandingStore.Fold(read(spark, dir)))
 
   /** Initialize the store with a FULL resolution (gen 0), replacing
     * anything at `dir`. `labels` must carry (id, comp) —
     * [[Text.dupComponentsStar]]'s output shape.
     */
-  def init(labels: DataFrame, dir: String): Unit = {
-    val spark = labels.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-    writeGeneration(spark, dir, 0L, labels.select(col("id"), col("comp")),
-      claimed = false)
-  }
+  def init(labels: DataFrame, dir: String): Unit =
+    Store.build(labels.sparkSession, dir)(
+      stageLabels(labels.select(col("id"), col("comp")), _))
 
   /** Apply one night's delta pair list (the shape [[Text.lshProbe]]
     * emits, via [[Text.deltaPairList]]'s contract: cross pairs ∪
@@ -84,7 +86,7 @@ object ClusterStore {
     * to retry. The read itself pins `asOfGen = snapshot`, so the labels
     * merged are exactly the fenced state. (A claim left by a CRASHED
     * merge blocks the slot until [[compact]] wipes it — the documented
-    * remedy, per GenCommit.resetCommits.)
+    * remedy, per [[graft.sources.GenCommit]]'s resetCommits.)
     */
   def merge(
       spark: SparkSession,
@@ -102,8 +104,7 @@ object ClusterStore {
     try {
       val cur = read(spark, dir, asOfGen = Some(base))
       val (_, rewired) = Text.ccMergeParts(cur, deltaPairs, aCol, bCol)
-      writeGeneration(spark, dir, base + 1, rewired, claimed = true,
-        token = tk)
+      Store.commitClaimed(spark, dir, base + 1, tk)(stageLabels(rewired, _))
     } catch {
       case t: Throwable =>
         // an IN-PROCESS failure before anything was promoted (bad delta
@@ -149,13 +150,9 @@ object ClusterStore {
       idCol: String = "id"): Unit = {
     val compType = graft.sources.GenCommit
       .committedTable(spark, dir, "labels").schema("comp").dataType
-    val tk = graft.sources.GenCommit.newToken()
-    val gen = graft.sources.GenCommit.claimNextGen(spark, dir, Tables1,
-      token = tk)
-    writeGeneration(spark, dir, gen,
+    Store.append(spark, dir)(stageLabels(
       ids.select(col(idCol).as("id"),
-        lit(null).cast(compType).as("comp")).distinct(),
-      claimed = true, token = tk)
+        lit(null).cast(compType).as("comp")).distinct(), _))
   }
 
   /** The current labels (or, with `asOfGen = k`, the labels as of night
@@ -176,22 +173,13 @@ object ClusterStore {
       .filter(col("comp").isNotNull)
 
   /** Fold history into the single highest committed generation —
-    * [[Text.lshCompact]]'s recipe: SwapDir crash-safe table rewrite,
+    * [[graft.sources.StandingStore.compact]]: crash-safe table rewrite,
     * then the commit set resets to {keepGen} (stale as-of pins fail
     * loudly; the surviving pin denotes identical data). Single-writer
     * maintenance window, as with every compactor.
     */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    recover(spark, dir)
-    graft.sources.GenCommit.gcStages(spark, dir)
-    val keepGen = graft.sources.GenCommit.lastCommitted(spark, dir)
-    read(spark, dir)
-      .withColumn("gen", lit(keepGen))
-      .write.mode("overwrite").partitionBy("gen")
-      .parquet(graft.sources.SwapDir.stagePath(dir, "labels"))
-    graft.sources.SwapDir.swap(spark, dir, "labels")
-    graft.sources.GenCommit.resetCommits(spark, dir, keepGen)
-  }
+  def compact(spark: SparkSession, dir: String): Unit =
+    Store.compact(spark, dir)
 
   /** The measured compact-now signal ([[graft.sources.GenCommit
     * .shouldCompact]]'s crossover over the labels table): true once the
@@ -201,18 +189,11 @@ object ClusterStore {
     */
   def shouldCompact(spark: SparkSession, dir: String,
       expectedReads: Int = 30): Boolean =
-    graft.sources.GenCommit.shouldCompact(spark, dir, Tables1,
-      expectedReads)
+    Store.shouldCompact(spark, dir, expectedReads)
 
   /** Heal an interrupted [[compact]] swap; safe any time. */
-  def recover(spark: SparkSession, dir: String): Unit = {
-    graft.sources.SwapDir.recover(spark, dir, "labels",
-      s"ClusterStore.recover: no labels at $dir in any generation — " +
-        "the store is gone, rebuild with init")
-    graft.sources.SwapDir.recover(spark, dir, "commits",
-      s"ClusterStore.recover: no commit set at $dir in any generation " +
-        "— the store is gone, rebuild with init")
-  }
+  def recover(spark: SparkSession, dir: String): Unit =
+    Store.recover(spark, dir)
 
   /** Release claims left by merges that died BEFORE staging anything —
     * the targeted unblock for a crashed nightly (VERDICT r14 #4): the
@@ -222,14 +203,8 @@ object ClusterStore {
     * one — see [[graft.sources.GenCommit.recoverClaims]]).
     */
   def recoverClaims(spark: SparkSession, dir: String): Seq[Long] =
-    graft.sources.GenCommit.recoverClaims(spark, dir, Tables1)
+    graft.sources.GenCommit.recoverClaims(spark, dir, Store.tables)
 
-  private def writeGeneration(spark: SparkSession, dir: String, gen: Long,
-      labels: DataFrame, claimed: Boolean, token: String = ""): Unit = {
-    val tk = if (token.nonEmpty) token else graft.sources.GenCommit.newToken()
-    labels
-      .write.mode("overwrite")
-      .parquet(graft.sources.GenCommit.stagePath(dir, gen, "labels", tk))
-    graft.sources.GenCommit.publish(spark, dir, gen, Tables1, tk, claimed)
-  }
+  private def stageLabels(labels: DataFrame, path: String => String): Unit =
+    labels.write.mode("overwrite").parquet(path("labels"))
 }

@@ -55,12 +55,22 @@ object Inverted {
     "t" + (c.getValue % nBuckets)
   }
 
-  private val Tables2 = Seq("postings", "stats")
-
-  /** Claim-scan table set: includes the tombstone table so a delete
-    * generation can never collide with an append's id.
+  /** The inverted index's lifecycle. Compaction rewrites the alive
+    * postings one file per bucket and collapses the committed stats rows
+    * (the delete generations' negative rows included) to their net sum.
     */
-  private val Tables2Scan = Tables2 :+ graft.sources.GenCommit.TombsTable
+  private val InvStore = graft.sources.StandingStore("inverted index",
+    "invBuild", Seq("postings", "stats"),
+    scanTables = Seq("postings", "stats", graft.sources.GenCommit.TombsTable),
+    fold = (spark, dir, t) =>
+      if (t == "postings")
+        graft.sources.StandingStore.Fold(
+          graft.sources.StandingStore.alive(spark, dir, t, "doc_id")
+            .repartition(col("tbucket")), "tbucket")
+      else
+        graft.sources.StandingStore.Fold(committedTable(spark, dir, t)
+          .agg(sum(col("n_docs")).cast("long").as("n_docs"),
+            sum(col("total_dl")).cast("long").as("total_dl"))))
 
   /** The shared tokenization base: (doc_id, w, dl) — computed ONCE per
     * build/append and PERSISTED across the stats and postings writes
@@ -87,27 +97,21 @@ object Inverted {
       count(lit(1)).as("n_docs"),
       coalesce(sum(col("dl")), lit(0L)).cast("long").as("total_dl"))
 
-  /** Stage and atomically commit one generation of (postings, stats) —
-    * [[graft.sources.GenCommit]]'s protocol; see its scaladoc for why a
-    * plain two-table append has an unfixable half-applied window.
+  /** Stage one generation of (postings, stats), committed together —
+    * see [[graft.sources.GenCommit]]'s scaladoc for why a plain
+    * two-table append has an unfixable half-applied window.
     */
-  private def writeGeneration(spark: SparkSession, indexDir: String,
-      gen: Long, docs: DataFrame, nBuckets: Int,
-      claimed: Boolean = false, token: String = ""): Unit = {
-    val tk = if (token.nonEmpty) token else graft.sources.GenCommit.newToken()
+  private def stageGeneration(docs: DataFrame, nBuckets: Int,
+      path: String => String): Unit = {
     val base = tokenized(docs).persist()
     try {
       postingsFrom(base, nBuckets)
         .write.mode("overwrite").partitionBy("tbucket")
-        .parquet(graft.sources.GenCommit
-          .stagePath(indexDir, gen, "postings", tk))
+        .parquet(path("postings"))
       statsFrom(base)
         .write.mode("overwrite")
-        .parquet(graft.sources.GenCommit
-          .stagePath(indexDir, gen, "stats", tk))
+        .parquet(path("stats"))
     } finally base.unpersist()
-    graft.sources.GenCommit.publish(spark, indexDir, gen, Tables2, tk,
-      claimed)
   }
 
   /** A table's COMMITTED rows: generations are the first partition level
@@ -125,13 +129,11 @@ object Inverted {
       nBuckets: Int = 64): Unit = {
     require(nBuckets >= 1, s"nBuckets must be positive: $nBuckets")
     val spark = docs.sparkSession
-    // a build REPLACES any prior index at this path
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(indexDir), true)
-    spark.range(1).select(lit(nBuckets).as("n_buckets"))
-      .write.mode("overwrite").parquet(s"$indexDir/meta")
-    writeGeneration(spark, indexDir, 0L, docs, nBuckets)
+    InvStore.build(spark, indexDir) { path =>
+      spark.range(1).select(lit(nBuckets).as("n_buckets"))
+        .write.mode("overwrite").parquet(s"$indexDir/meta")
+      stageGeneration(docs, nBuckets, path)
+    }
   }
 
   private def nBucketsOf(spark: SparkSession, indexDir: String): Int =
@@ -153,13 +155,7 @@ object Inverted {
       indexDir: String,
       delta: DataFrame): Unit = {
     val nBuckets = nBucketsOf(spark, indexDir)
-    // claim-first: fence the id before staging (metadata-only retries);
-    // the claim records the writer token so publish verifies ownership
-    val tk = graft.sources.GenCommit.newToken()
-    val gen = graft.sources.GenCommit.claimNextGen(spark, indexDir,
-      Tables2Scan, token = tk)
-    writeGeneration(spark, indexDir, gen, delta, nBuckets, claimed = true,
-      token = tk)
+    InvStore.append(spark, indexDir)(stageGeneration(delta, nBuckets, _))
   }
 
   /** TOMBSTONE delete from the standing inverted index — remove
@@ -229,34 +225,25 @@ object Inverted {
             "would skew the index's N/avgdl (ids must be CURRENT " +
             "members, passed once)")
       }
-      val tk = graft.sources.GenCommit.newToken()
-      val gen = graft.sources.GenCommit.claimNextGen(spark, indexDir,
-        Tables2Scan, token = tk)
-      del.select(col("id"))
-        .write.mode("overwrite")
-        .parquet(graft.sources.GenCommit.stagePath(indexDir, gen,
-          graft.sources.GenCommit.TombsTable, tk))
-      // dl per removed id from its ALIVE posting rows (any term's row
-      // carries the doc's dl — max() just picks one); ids without
-      // postings (token-less members) contribute 0, matching what their
-      // build generation added. The semi-join to the (small, broadcast)
-      // delete set runs BELOW the aggregate (review r15): the scan stays
-      // one narrow pass over the postings, but the groupBy shuffles only
-      // the deleted ids' rows — delete-proportional, not corpus-wide
-      val alivePost = graft.sources.GenCommit.maskTombstones(spark,
-        indexDir, committedTable(spark, indexDir, "postings"), "doc_id")
-      val dl = alivePost.select(col("doc_id").as("id"), col("dl"))
-        .join(del, Seq("id"), "left_semi")
-        .groupBy(col("id")).agg(max(col("dl")).as("dl"))
-      del.join(dl, Seq("id"), "left")
-        .agg((-count(lit(1))).cast("long").as("n_docs"),
-          (-coalesce(sum(col("dl")), lit(0L))).cast("long").as("total_dl"))
-        .write.mode("overwrite")
-        .parquet(graft.sources.GenCommit.stagePath(indexDir, gen,
-          "stats", tk))
-      graft.sources.GenCommit.publish(spark, indexDir, gen,
-        Seq(graft.sources.GenCommit.TombsTable, "stats"), tk,
-        claimed = true)
+      InvStore.delete(spark, indexDir, del, "id", Seq("stats"), { path =>
+        // dl per removed id from its ALIVE posting rows (any term's row
+        // carries the doc's dl — max() just picks one); ids without
+        // postings (token-less members) contribute 0, matching what their
+        // build generation added. The semi-join to the (small, broadcast)
+        // delete set runs BELOW the aggregate (review r15): the scan stays
+        // one narrow pass over the postings, but the groupBy shuffles only
+        // the deleted ids' rows — delete-proportional, not corpus-wide
+        val alivePost = graft.sources.GenCommit.maskTombstones(spark,
+          indexDir, committedTable(spark, indexDir, "postings"), "doc_id")
+        val dl = alivePost.select(col("doc_id").as("id"), col("dl"))
+          .join(del, Seq("id"), "left_semi")
+          .groupBy(col("id")).agg(max(col("dl")).as("dl"))
+        del.join(dl, Seq("id"), "left")
+          .agg((-count(lit(1))).cast("long").as("n_docs"),
+            (-coalesce(sum(col("dl")), lit(0L))).cast("long").as("total_dl"))
+          .write.mode("overwrite")
+          .parquet(path("stats"))
+      })
     } finally del.unpersist()
   }
 
@@ -343,78 +330,22 @@ object Inverted {
       .orderBy("doc_id", "pos")
   }
 
-  /** Small-file compaction + generation GC: the COMMITTED postings are
-    * rewritten ONE FILE PER BUCKET into a single generation 0, the
-    * committed stats collapse to one row, and the commit set resets to
-    * {0} — each step behind [[graft.sources.SwapDir]]'s crash-safe
-    * rename-aside swap ([[invRecover]] heals interruptions and runs here
-    * on entry). Uncommitted orphan generations (crashed appends) vanish
-    * with the table swaps. Window-by-window consistency: after the
-    * postings swap the commit set still lists old generation ids, but
-    * `isin` over absent partition values reads nothing, and generation 0
-    * — the only data — is in the set, so every window serves exactly the
-    * committed rows. Contents untouched ⇒ searches bit-identical
-    * (spec-pinned).
+  /** Small-file compaction + generation GC: the alive postings are
+    * rewritten ONE FILE PER BUCKET into the single highest committed
+    * generation, the committed stats collapse to one row, and the commit
+    * set resets to that generation — [[graft.sources.StandingStore
+    * .compact]], whose window argument covers every crash point
+    * ([[invRecover]] heals interruptions and runs here on entry).
+    * Contents untouched ⇒ searches bit-identical (spec-pinned).
     */
-  def invCompact(spark: SparkSession, indexDir: String): Unit = {
-    invRecover(spark, indexDir)
-    graft.sources.GenCommit.gcStages(spark, indexDir)
-    // collapse keeps the HIGHEST committed id (never 0): ids are never
-    // reused across compaction, so stale asOfGen pins fail loudly and
-    // the surviving pin means the same data before and after (review
-    // r14); the consistency window holds because the old committed set
-    // contains keepGen until the commit-set swap replaces it
-    val keepGen = graft.sources.GenCommit.lastCommitted(spark, indexDir)
-    // tombstones FOLD: the rewrite keeps alive posting rows only, the
-    // stats collapse below nets the delete generations' negative rows,
-    // and the tombs dir drops last (lshCompact's window argument: the
-    // compacted rows sit at gen=keepGen ≥ every tombstone generation,
-    // which the strict later-generation rule leaves untouched)
-    graft.sources.GenCommit.maskTombstones(spark, indexDir,
-        committedTable(spark, indexDir, "postings"), "doc_id")
-      .drop("gen")
-      .repartition(col("tbucket"))
-      .withColumn("gen", lit(keepGen))
-      .write.mode("overwrite").partitionBy("gen", "tbucket")
-      .parquet(graft.sources.SwapDir.stagePath(indexDir, "postings"))
-    graft.sources.SwapDir.swap(spark, indexDir, "postings")
-    committedTable(spark, indexDir, "stats")
-      .agg(sum(col("n_docs")).cast("long").as("n_docs"),
-        sum(col("total_dl")).cast("long").as("total_dl"))
-      .withColumn("gen", lit(keepGen))
-      .write.mode("overwrite").partitionBy("gen")
-      .parquet(graft.sources.SwapDir.stagePath(indexDir, "stats"))
-    graft.sources.SwapDir.swap(spark, indexDir, "stats")
-    graft.sources.GenCommit.dropTombs(spark, indexDir)
-    graft.sources.GenCommit.resetCommits(spark, indexDir, keepGen)
-  }
-
-  /** The measured compact-now signal for the inverted index
-    * ([[graft.sources.GenCommit.shouldCompact]] over postings + stats +
-    * tombstones).
-    */
-  def invShouldCompact(spark: SparkSession, indexDir: String,
-      expectedReads: Int = 30): Boolean =
-    graft.sources.GenCommit.shouldCompact(spark, indexDir, Tables2Scan,
-      expectedReads)
+  def invCompact(spark: SparkSession, indexDir: String): Unit =
+    InvStore.compact(spark, indexDir)
 
   /** Heal an interrupted [[invCompact]] swap — the two tables and the
-    * commit set, each independently (a crash between swaps leaves
-    * earlier ones promoted and later ones not; each rolls to a complete
-    * generation, and every intermediate state is read-consistent — see
-    * [[invCompact]]'s window argument).
+    * commit set, each independently.
     */
-  def invRecover(spark: SparkSession, indexDir: String): Unit = {
-    graft.sources.SwapDir.recover(spark, indexDir, "postings",
-      s"invRecover: no postings at $indexDir in any generation — " +
-        "the index is gone, rebuild with invBuild")
-    graft.sources.SwapDir.recover(spark, indexDir, "stats",
-      s"invRecover: no stats at $indexDir in any generation — " +
-        "the index is gone, rebuild with invBuild")
-    graft.sources.SwapDir.recover(spark, indexDir, "commits",
-      s"invRecover: no commit set at $indexDir in any generation — " +
-        "the index is gone, rebuild with invBuild")
-  }
+  def invRecover(spark: SparkSession, indexDir: String): Unit =
+    InvStore.recover(spark, indexDir)
 
   /** q61c_bm25_indexed: q61's two-term BM25 through the FULL index
     * lifecycle — build 3/5 of the corpus, append the rest under the

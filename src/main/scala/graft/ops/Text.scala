@@ -802,14 +802,39 @@ object Text {
     *  - `indexDir/commits/<k>`: the commit markers; readers admit exactly
     *    the marked generations.
     */
-  private val LshTables = Seq("docs", "buckets")
+  private val LshStore = graft.sources.StandingStore("LSH index",
+    "lshBuild", Seq("buckets", "docs"),
+    scanTables = Seq("docs", "buckets", graft.sources.GenCommit.TombsTable),
+    fold = lshFold)
 
-  /** Every table whose gen dirs burn an id — the claim scan includes the
-    * tombstone table so a delete generation can never collide with an
-    * append's ([[lshDelete]]).
+  /** [[lshCompact]]'s per-table rewrite of the alive rows. Buckets: one
+    * file per (band, sb) — each combination hashes to exactly one task,
+    * so files-per-combination collapses to 1 regardless of how many
+    * generations fed it. Docs: the file count comes from filesystem
+    * metadata (~128 MB of parquet per file, ≥ 2 so the rewrite never
+    * regresses to one task), the ledger compactor's sizing rule;
+    * range-clustering on (db, doc_id) keeps total files near
+    * max(nFiles, doc_buckets) instead of the hash-shuffle worst case
+    * nFiles × doc_buckets.
     */
-  private val LshScanTables =
-    LshTables :+ graft.sources.GenCommit.TombsTable
+  private def lshFold(spark: SparkSession, indexDir: String,
+      table: String): graft.sources.StandingStore.Fold = {
+    val rows = graft.sources.StandingStore.alive(spark, indexDir, table,
+      "doc_id")
+    if (table == "buckets")
+      graft.sources.StandingStore.Fold(
+        rows.repartition(col("band"), col("sb")), "band", "sb")
+    else {
+      val bytes = new org.apache.hadoop.fs.Path(indexDir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(new org.apache.hadoop.fs.Path(s"$indexDir/docs"))
+        .getLength
+      val nFiles = math.max(2, math.min(spark.sparkContext.defaultParallelism,
+        (bytes / (128L << 20)).toInt + 1))
+      graft.sources.StandingStore.Fold(
+        rows.repartitionByRange(nFiles, col("db"), col("doc_id")), "db")
+    }
+  }
 
   /** The bucket table's second partition level: crc32 of the band
     * signature, modulo the index's frozen `sub_buckets`. crc32 (a fixed
@@ -827,36 +852,15 @@ object Text {
     concat(lit("d"), pmod(crc32(id.cast("string").cast("binary")),
       lit(docBuckets.toLong)).cast("string"))
 
-  /** Stage and atomically commit one generation of (docs, buckets) —
-    * [[graft.sources.GenCommit]]'s protocol. The signature frame is
-    * PERSISTED across the two staged writes: two write jobs cannot share
-    * an exchange, so without the persist every build/append would
-    * shingle and minhash its input twice (review r13 — the previous
-    * "ReuseExchange" comment claimed cross-job reuse that does not
-    * exist).
-    */
-  private def lshWriteGeneration(spark: SparkSession, indexDir: String,
-      gen: Long, docs: DataFrame, idCol: String, textCol: String,
-      shingleN: Int, numHashes: Int, bands: Int, subBuckets: Int,
-      docBuckets: Int, claimed: Boolean = false,
-      token: String = ""): Unit = {
-    val sig = lshSignatures(docs, idCol, textCol, shingleN, numHashes,
-      bands).persist()
-    try lshWriteSig(spark, indexDir, gen, sig, subBuckets, docBuckets,
-      claimed, token)
-    finally sig.unpersist()
-  }
-
-  /** Stage and commit one generation from an ALREADY-PERSISTED signature
-    * frame — split out of [[lshWriteGeneration]] so [[lshBuild]] can run
-    * its auto-sizing count() against the same persisted pass instead of
-    * scanning the corpus twice (review r14). Caller owns the persist
+  /** Stage one generation of (docs, buckets) from a PERSISTED signature
+    * frame: two write jobs cannot share an exchange, so without the
+    * persist every build/append would shingle and minhash its input twice
+    * (review r13), and [[lshBuild]] runs its auto-sizing count() against
+    * the same persisted pass (review r14). Caller owns the persist
     * lifecycle.
     */
-  private def lshWriteSig(spark: SparkSession, indexDir: String,
-      gen: Long, sig: DataFrame, subBuckets: Int, docBuckets: Int,
-      claimed: Boolean, token: String = ""): Unit = {
-    val tk = if (token.nonEmpty) token else graft.sources.GenCommit.newToken()
+  private def lshStageSig(sig: DataFrame, subBuckets: Int, docBuckets: Int,
+      path: String => String): Unit = {
     // hash-cluster on db so each db value lands in exactly one task
     // (one file per touched db per generation, instead of tasks ×
     // doc_buckets) — HASH, not repartitionByRange, because the range
@@ -868,8 +872,7 @@ object Text {
       .withColumn("db", lshDb(col("doc_id"), docBuckets))
       .repartition(col("db"))
       .write.mode("overwrite").partitionBy("db")
-      .parquet(graft.sources.GenCommit
-        .stagePath(indexDir, gen, "docs", tk))
+      .parquet(path("docs"))
     // one file per touched (band, sb): hash-cluster on the partition
     // columns so each combination lands in exactly one task
     sig.select(col("doc_id"),
@@ -879,10 +882,7 @@ object Text {
       .withColumn("sb", lshSb(col("sig"), subBuckets))
       .repartition(col("band"), col("sb"))
       .write.mode("overwrite").partitionBy("band", "sb")
-      .parquet(graft.sources.GenCommit
-        .stagePath(indexDir, gen, "buckets", tk))
-    graft.sources.GenCommit.publish(spark, indexDir, gen, LshTables, tk,
-      claimed)
+      .parquet(path("buckets"))
   }
 
   /** A table's COMMITTED rows (generation = first partition level,
@@ -936,18 +936,16 @@ object Text {
           (if (subBuckets > 0) subBuckets else pow2Clamp(n / 65536, 128),
             if (docBuckets > 0) docBuckets else pow2Clamp(n / 16384, 256))
         }
-      // a build REPLACES any prior index at this path
-      val fs = new org.apache.hadoop.fs.Path(indexDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(indexDir), true)
-      spark.range(1).select(
-          lit(shingleN).as("shingle_n"),
-          lit(numHashes).as("num_hashes"),
-          lit(bands).as("bands"),
-          lit(sbN).as("sub_buckets"),
-          lit(dbN).as("doc_buckets"))
-        .write.mode("overwrite").parquet(s"$indexDir/meta")
-      lshWriteSig(spark, indexDir, 0L, sig, sbN, dbN, claimed = false)
+      LshStore.build(spark, indexDir) { path =>
+        spark.range(1).select(
+            lit(shingleN).as("shingle_n"),
+            lit(numHashes).as("num_hashes"),
+            lit(bands).as("bands"),
+            lit(sbN).as("sub_buckets"),
+            lit(dbN).as("doc_buckets"))
+          .write.mode("overwrite").parquet(s"$indexDir/meta")
+        lshStageSig(sig, sbN, dbN, path)
+      }
     } finally sig.unpersist()
   }
 
@@ -980,16 +978,12 @@ object Text {
       textCol: String = "text"): Unit = {
     val (shingleN, numHashes, bands, subBuckets, docBuckets) =
       lshMeta(spark, indexDir)
-    // claim-first: the id is fenced BEFORE the staged write, so losing
-    // a race with a concurrent appender costs a metadata retry inside
-    // claimNextGen, never a re-staged write job; the claim records the
-    // writer token so publish verifies ownership (ADVICE r14)
-    val tk = graft.sources.GenCommit.newToken()
-    val gen = graft.sources.GenCommit.claimNextGen(spark, indexDir,
-      LshScanTables, token = tk)
-    lshWriteGeneration(spark, indexDir, gen, delta, idCol, textCol,
-      shingleN, numHashes, bands, subBuckets, docBuckets, claimed = true,
-      token = tk)
+    LshStore.append(spark, indexDir) { path =>
+      val sig = lshSignatures(delta, idCol, textCol, shingleN, numHashes,
+        bands).persist()
+      try lshStageSig(sig, subBuckets, docBuckets, path)
+      finally sig.unpersist()
+    }
   }
 
   /** TOMBSTONE delete from the standing LSH index — remove documents
@@ -1015,17 +1009,8 @@ object Text {
       spark: SparkSession,
       indexDir: String,
       ids: DataFrame,
-      idCol: String = "doc_id"): Unit = {
-    val tk = graft.sources.GenCommit.newToken()
-    val gen = graft.sources.GenCommit.claimNextGen(spark, indexDir,
-      LshScanTables, token = tk)
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("overwrite")
-      .parquet(graft.sources.GenCommit.stagePath(indexDir, gen,
-        graft.sources.GenCommit.TombsTable, tk))
-    graft.sources.GenCommit.publish(spark, indexDir, gen,
-      Seq(graft.sources.GenCommit.TombsTable), tk, claimed = true)
-  }
+      idCol: String = "doc_id"): Unit =
+    LshStore.delete(spark, indexDir, ids, idCol)
 
   /** Probe a materialized LSH index ([[lshBuild]]) with a delta of
     * documents: every (probe, indexed) pair at Jaccard ≥ `threshold` —
@@ -1096,7 +1081,7 @@ object Text {
       s"probeBands must be in [1, $bands]: $k"))
     // persisted across the DRIVER-SIDE jobs below (the shape job and
     // the optional point-regime db collect) — separate jobs cannot
-    // share an exchange (lshWriteGeneration's lesson), so without the
+    // share an exchange (lshStageSig's lesson), so without the
     // persist each would re-parse, re-shingle and re-minhash the probe
     // set. Unpersisted before returning: the session's CacheManager
     // holds cached plans STRONGLY (ContextCleaner does not reclaim SQL
@@ -1201,97 +1186,31 @@ object Text {
     * [[lshAppend]]s is ~365 files per band partition (and per the docs
     * table), the same lake small-files problem [[graft.ops.Vector
     * .ivfCompact]] solves for IVF, fixed the same way: rewrite buckets
-    * ONE FILE PER BAND (repartition on the partition column) and the docs
-    * table range-partitioned on doc_id, each behind [[graft.sources
-    * .SwapDir]]'s crash-safe rename-aside swap (every failure point
-    * leaves a complete set on disk; [[lshRecover]] heals interrupted
-    * swaps and runs here on entry). Contents are untouched, so probes
-    * before and after are bit-identical (spec-pinned). Single-writer,
-    * maintenance-window semantics, as with any lake table rewrite.
+    * ONE FILE PER (band, sb) and the docs table range-partitioned on
+    * doc_id ([[lshFold]]), alive rows only, through
+    * [[graft.sources.StandingStore.compact]] (its window argument covers
+    * every crash point; [[lshRecover]] heals interrupted swaps and runs
+    * here on entry). Contents are untouched, so probes before and after
+    * are bit-identical (spec-pinned). Single-writer, maintenance-window
+    * semantics, as with any lake table rewrite.
     */
-  def lshCompact(spark: SparkSession, indexDir: String): Unit = {
-    lshRecover(spark, indexDir)
-    graft.sources.GenCommit.gcStages(spark, indexDir)
-    // the collapsed table keeps the HIGHEST committed id, not 0: ids are
-    // never reused across compaction, so a stale asOfGen pin fails
-    // loudly instead of silently resolving to post-compaction content,
-    // while a pin at the surviving id denotes the same data before and
-    // after (review r14). The consistency window still holds: until the
-    // commit-set swap, readers filter the compacted single-generation
-    // table by the OLD committed set, which contains keepGen — complete.
-    val keepGen = graft.sources.GenCommit.lastCommitted(spark, indexDir)
-    // tombstones FOLD here: the rewrite keeps only alive rows and the
-    // tombs table is dropped below. Window consistency holds throughout:
-    // the rewritten rows land at gen=keepGen, and a tombstone can sit at
-    // most AT keepGen (never later), so the strict tombGen > gen rule
-    // masks nothing of the compacted data even before the tombs dir
-    // goes — every intermediate state reads alive rows exactly
-    def aliveC(table: String) = graft.sources.GenCommit.maskTombstones(
-      spark, indexDir, lshCommitted(spark, indexDir, table), "doc_id")
-    // one file per (band, sb): each combination hashes to exactly one
-    // task, so files-per-combination collapses to 1 regardless of how
-    // many generations fed it
-    aliveC("buckets").drop("gen")
-      .repartition(col("band"), col("sb"))
-      .withColumn("gen", lit(keepGen))
-      .write.mode("overwrite").partitionBy("gen", "band", "sb")
-      .parquet(graft.sources.SwapDir.stagePath(indexDir, "buckets"))
-    graft.sources.SwapDir.swap(spark, indexDir, "buckets")
-    val docs = aliveC("docs").drop("gen")
-    // file count from filesystem metadata (~128 MB of parquet per file,
-    // ≥ 2 so the rewrite never regresses to one task), the ledger
-    // compactor's sizing rule; range-clustering on (db, doc_id) keeps
-    // total files near max(nFiles, doc_buckets) instead of the
-    // hash-shuffle worst case nFiles × doc_buckets
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(
-      new org.apache.hadoop.fs.Path(s"$indexDir/docs")).getLength
-    val nFiles = math.max(2, math.min(spark.sparkContext.defaultParallelism,
-      (bytes / (128L << 20)).toInt + 1))
-    docs.repartitionByRange(nFiles, col("db"), col("doc_id"))
-      .withColumn("gen", lit(keepGen))
-      .write.mode("overwrite").partitionBy("gen", "db")
-      .parquet(graft.sources.SwapDir.stagePath(indexDir, "docs"))
-    graft.sources.SwapDir.swap(spark, indexDir, "docs")
-    // folded tombstones go last: both data tables are already alive-only
-    // at gen=keepGen (which the strict masking rule leaves untouched —
-    // see above), so dropping the tombs dir changes no read at any
-    // crash point
-    graft.sources.GenCommit.dropTombs(spark, indexDir)
-    // commit set resets to {keepGen}; see invCompact's window-by-window
-    // argument — every intermediate state serves exactly the committed
-    // rows, and uncommitted orphan generations vanish with the swaps
-    graft.sources.GenCommit.resetCommits(spark, indexDir, keepGen)
-  }
+  def lshCompact(spark: SparkSession, indexDir: String): Unit =
+    LshStore.compact(spark, indexDir)
 
   /** The measured compact-now signal for the LSH index ([[graft.sources
     * .GenCommit.shouldCompact]]'s crossover over docs + buckets + the
-    * tombstone table — tombstone bytes are pure read redundancy, so they
-    * push toward folding).
+    * tombstone table).
     */
   def lshShouldCompact(spark: SparkSession, indexDir: String,
       expectedReads: Int = 30): Boolean =
-    graft.sources.GenCommit.shouldCompact(spark, indexDir, LshScanTables,
-      expectedReads)
+    LshStore.shouldCompact(spark, indexDir, expectedReads)
 
   /** Heal an LSH index whose [[lshCompact]] swap was interrupted — the
-    * two tables and the commit set, each independently (a crash between
-    * swaps leaves earlier ones promoted and later ones not; each heals
-    * to a complete generation, every intermediate state read-consistent).
-    * Safe any time; lshCompact runs it on entry.
+    * two tables and the commit set, each independently. Safe any time;
+    * lshCompact runs it on entry.
     */
-  def lshRecover(spark: SparkSession, indexDir: String): Unit = {
-    graft.sources.SwapDir.recover(spark, indexDir, "buckets",
-      s"lshRecover: no buckets at $indexDir in any generation — " +
-        "the index is gone, rebuild with lshBuild")
-    graft.sources.SwapDir.recover(spark, indexDir, "docs",
-      s"lshRecover: no docs at $indexDir in any generation — " +
-        "the index is gone, rebuild with lshBuild")
-    graft.sources.SwapDir.recover(spark, indexDir, "commits",
-      s"lshRecover: no commit set at $indexDir in any generation — " +
-        "the index is gone, rebuild with lshBuild")
-  }
+  def lshRecover(spark: SparkSession, indexDir: String): Unit =
+    LshStore.recover(spark, indexDir)
 
   /** x21b_delta_dedup_indexed: [[x21]] through the STANDING index — the
     * full lifecycle in the gated path: build over 3/5 of the corpus,

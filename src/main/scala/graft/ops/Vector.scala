@@ -525,42 +525,59 @@ object Vector {
     // pin) without re-paying — or re-randomizing — the training pass
     val refined = centroids.getOrElse(seedCentroids(c0, nlist, lloydIters))
     require(refined.nonEmpty, "cannot build an IVF index over an empty corpus")
-    // persist the already-collected quantizer (nlist rows — index
-    // metadata) rather than re-running the Lloyd aggregates; the cell
-    // column keeps the caller's id type
-    val centSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cell", c0.schema("id").dataType),
-      org.apache.spark.sql.types.StructField("cvec",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
-    // a build REPLACES any prior index at this path (the lshBuild/
-    // invBuild contract, unified in r14 with the GenCommit migration)
-    val fs0 = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs0.delete(new org.apache.hadoop.fs.Path(indexDir), true)
+    // persist the already-collected quantizer rather than re-running
+    // the Lloyd aggregates
+    IvfStore.build(spark, indexDir) { path =>
+      writeCentroids(spark, indexDir, refined, c0.schema("id").dataType)
+      ivfPostingsOf(c0, refined).write.mode("overwrite").partitionBy("cell")
+        .parquet(path("postings"))
+    }
+  }
+
+  /** Persist a quantizer (nlist rows — index metadata) at
+    * `indexDir/centroids`, the cell column in the caller's id type.
+    */
+  private[ops] def writeCentroids(spark: SparkSession, indexDir: String,
+      cents: Seq[(Any, Seq[Float])],
+      idType: org.apache.spark.sql.types.DataType): Unit = {
+    import org.apache.spark.sql.types._
     spark.createDataFrame(
         spark.sparkContext.parallelize(
-          refined.toIndexedSeq.map(t =>
-            org.apache.spark.sql.Row(t._1, t._2)), 1),
-        centSchema)
+          cents.toIndexedSeq.map(t => org.apache.spark.sql.Row(t._1, t._2)),
+          1),
+        StructType(Seq(StructField("cell", idType),
+          StructField("cvec", ArrayType(FloatType)))))
       .write.mode("overwrite").parquet(s"$indexDir/centroids")
-    val tk = graft.sources.GenCommit.newToken()
-    nearestCells(c0, refined, 1)
+  }
+
+  /** The stored quantizer [[writeCentroids]] persisted. */
+  private[ops] def readCentroids(spark: SparkSession,
+      indexDir: String): Seq[(Any, Seq[Float])] =
+    spark.read.parquet(s"$indexDir/centroids")
+      .collect().toSeq.map(r => (r.get(0), r.getSeq[Float](1)))
+
+  /** The postings rows of a (id, vec) frame under quantizer `cents`. */
+  private def ivfPostingsOf(c0: DataFrame,
+      cents: Seq[(Any, Seq[Float])]): DataFrame =
+    nearestCells(c0, cents, 1)
       .select(concat(lit("c"), col("cell").cast("string")).as("cell"),
         col("id").as("neighbor_id"), col("vec").as("c_vec"))
       .withColumn("c_norm", nNorm(col("c_vec")))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(graft.sources.GenCommit
-        .stagePath(indexDir, 0L, "postings", tk))
-    graft.sources.GenCommit.publish(spark, indexDir, 0L, IvfTables, tk)
-  }
 
-  private val IvfTables = Seq("postings")
-
-  /** Claim-scan table set: includes the tombstone table so a delete
-    * generation can never collide with an append's id.
+  /** The compaction of a cell-partitioned table (IVF and IVF-PQ): alive
+    * rows, one file per cell.
     */
-  private val IvfScanTables = IvfTables :+ graft.sources.GenCommit.TombsTable
+  private[ops] def cellFold(spark: SparkSession, dir: String,
+      table: String): graft.sources.StandingStore.Fold =
+    graft.sources.StandingStore.Fold(
+      graft.sources.StandingStore.alive(spark, dir, table, "neighbor_id")
+        .repartition(col("cell")), "cell")
+
+  /** The IVF index's lifecycle: one postings table, tombstone deletes. */
+  private val IvfStore = graft.sources.StandingStore("IVF index",
+    "ivfBuild", Seq("postings"),
+    scanTables = Seq("postings", graft.sources.GenCommit.TombsTable),
+    fold = cellFold)
 
   /** The postings' COMMITTED rows (generation = first partition level,
     * admitted by commit marker — a crashed or half-published append is
@@ -600,28 +617,18 @@ object Vector {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Unit = {
     graft.ext.GraftFunctions.ensureVecDot(spark)
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-      .collect().toSeq.map(r => (r.get(0), r.getSeq[Float](1)))
+    val cents = readCentroids(spark, indexDir)
     require(cents.nonEmpty, s"no centroids at $indexDir — build first")
     // committed as a NEW GENERATION (not a raw directory append): a
     // crash mid-job-commit can no longer leave a partial delta VISIBLE
     // to searches — uncommitted generations are unread — and concurrent
-    // appends are writer-fenced (GenCommit migration, r14)
-    // claim-first: fence the id before staging (metadata-only retries);
-    // the claim records the writer token so publish verifies ownership
-    val tk = graft.sources.GenCommit.newToken()
-    val gen = graft.sources.GenCommit.claimNextGen(spark, indexDir,
-      IvfScanTables, token = tk)
-    nearestCells(
-        delta.select(col(idCol).as("id"), col(vecCol).as("vec")), cents, 1)
-      .select(concat(lit("c"), col("cell").cast("string")).as("cell"),
-        col("id").as("neighbor_id"), col("vec").as("c_vec"))
-      .withColumn("c_norm", nNorm(col("c_vec")))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(graft.sources.GenCommit
-        .stagePath(indexDir, gen, "postings", tk))
-    graft.sources.GenCommit.publish(spark, indexDir, gen, IvfTables, tk,
-      claimed = true)
+    // appends are writer-fenced
+    IvfStore.append(spark, indexDir) { path =>
+      ivfPostingsOf(
+          delta.select(col(idCol).as("id"), col(vecCol).as("vec")), cents)
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(path("postings"))
+    }
   }
 
   /** TOMBSTONE delete from the standing IVF index — remove vectors
@@ -641,17 +648,8 @@ object Vector {
       spark: SparkSession,
       indexDir: String,
       ids: DataFrame,
-      idCol: String = "vec_id"): Unit = {
-    val tk = graft.sources.GenCommit.newToken()
-    val gen = graft.sources.GenCommit.claimNextGen(spark, indexDir,
-      IvfScanTables, token = tk)
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("overwrite")
-      .parquet(graft.sources.GenCommit.stagePath(indexDir, gen,
-        graft.sources.GenCommit.TombsTable, tk))
-    graft.sources.GenCommit.publish(spark, indexDir, gen,
-      Seq(graft.sources.GenCommit.TombsTable), tk, claimed = true)
-  }
+      idCol: String = "vec_id"): Unit =
+    IvfStore.delete(spark, indexDir, ids, idCol)
 
   /** Small-file compaction for an appended IVF index — the third piece of
     * the index lifecycle (build → nightly [[ivfAppend]]s → periodic
@@ -663,78 +661,24 @@ object Vector {
     * same frozen quantizer; the quantizer/centroids are untouched so
     * searches before and after are bit-identical (spec-pinned).
     *
-    * CRASH SAFETY (single-writer semantics — ADVICE r11): the swap is
-    * rename-aside, never delete-then-rename, so EVERY failure point
-    * leaves a complete postings set recoverable on disk:
-    *   write postings_compacting (+_SUCCESS) →
-    *   (1) postings → postings_old → (2) postings_compacting →
-    *   postings → (3) delete postings_old.
-    * A crash before (1) leaves the live postings untouched; between
-    * (1) and (2) the new set is complete at postings_compacting and the
-    * old at postings_old (roll FORWARD); after (2) only the stale
-    * postings_old lingers (cleanup). [[ivfRecover]] heals all three
-    * states and runs automatically at the next compact. One writer at a
-    * time: a concurrent reader can observe a missing canonical path for
-    * the instant between the two renames — schedule compaction in the
-    * maintenance window, as with any lake table rewrite.
+    * Crash-safe and single-writer: [[graft.sources.StandingStore]]'s
+    * compaction, whose window argument covers every intermediate state;
+    * [[ivfRecover]] heals an interrupted swap and runs here on entry.
     *
     * Deliberately NOT a re-cluster: cell membership is preserved
     * verbatim. Rebalancing a drifted quantizer is `ivfBuild` with fresh
     * seeding — a different, costlier operation with different semantics.
     */
-  def ivfCompact(spark: SparkSession, indexDir: String): Unit = {
-    ivfRecover(spark, indexDir) // heal any interrupted previous swap first
-    graft.sources.GenCommit.gcStages(spark, indexDir)
-    // collapse keeps the HIGHEST committed id (never 0): ids are never
-    // reused across compaction, so stale asOfGen pins fail loudly and
-    // the surviving pin means the same data before and after (review r14)
-    val keepGen = graft.sources.GenCommit.lastCommitted(spark, indexDir)
-    // tombstones FOLD: alive rows only survive the rewrite, and the tombs
-    // dir drops before the commit-set reset (lshCompact's window
-    // argument: the compacted rows sit at gen=keepGen ≥ every tombstone
-    // generation, untouched by the strict later-generation rule)
-    graft.sources.GenCommit.maskTombstones(spark, indexDir,
-        ivfPostings(spark, indexDir), "neighbor_id")
-      .drop("gen")
-      .repartition(col("cell"))
-      .withColumn("gen", lit(keepGen))
-      .write.mode("overwrite").partitionBy("gen", "cell")
-      .parquet(graft.sources.SwapDir.stagePath(indexDir, "postings"))
-    graft.sources.SwapDir.swap(spark, indexDir, "postings")
-    graft.sources.GenCommit.dropTombs(spark, indexDir)
-    // commit set resets to {keepGen}: after the postings swap the listed
-    // old generation ids admit only rows of the (complete) compacted
-    // table, so every intermediate state serves exactly the committed
-    // rows — lshCompact's window-by-window argument applies verbatim
-    graft.sources.GenCommit.resetCommits(spark, indexDir, keepGen)
-  }
-
-  /** The measured compact-now signal for the IVF index
-    * ([[graft.sources.GenCommit.shouldCompact]] over postings +
-    * tombstones).
-    */
-  def ivfShouldCompact(spark: SparkSession, indexDir: String,
-      expectedReads: Int = 30): Boolean =
-    graft.sources.GenCommit.shouldCompact(spark, indexDir, IvfScanTables,
-      expectedReads)
+  def ivfCompact(spark: SparkSession, indexDir: String): Unit =
+    IvfStore.compact(spark, indexDir)
 
   /** Heal an IVF index whose [[ivfCompact]] swap was interrupted —
-    * postings and commit set independently (a crash between the swaps
-    * leaves the first promoted and the second not; each heals to a
-    * complete generation). Safe to run any time (no-op + stray cleanup
-    * on a healthy index); ivfCompact invokes it on entry so a crashed
-    * compaction self-heals on retry. The decision table lives in
-    * [[graft.sources.SwapDir.recover]] — the generic rename-aside
-    * protocol shared with the text-LSH and inverted compactors.
+    * postings and commit set independently. Safe to run any time (no-op
+    * + stray cleanup on a healthy index). The decision table lives in
+    * [[graft.sources.SwapDir]]'s recover.
     */
-  def ivfRecover(spark: SparkSession, indexDir: String): Unit = {
-    graft.sources.SwapDir.recover(spark, indexDir, "postings",
-      s"ivfRecover: no postings at $indexDir in any generation — " +
-        "the index is gone, rebuild with ivfBuild")
-    graft.sources.SwapDir.recover(spark, indexDir, "commits",
-      s"ivfRecover: no commit set at $indexDir in any generation — " +
-        "the index is gone, rebuild with ivfBuild")
-  }
+  def ivfRecover(spark: SparkSession, indexDir: String): Unit =
+    IvfStore.recover(spark, indexDir)
 
   /** Search a materialized IVF index ([[ivfBuild]]) — identical results to
     * [[ivfTopK]] at the same (nlist, nprobe, k) on the same corpus (pinned
@@ -756,8 +700,7 @@ object Vector {
       k: Int = 10,
       asOfGen: Option[Long] = None): DataFrame = {
     graft.ext.GraftFunctions.ensureVecDot(spark)
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-      .collect().toSeq.map(r => (r.get(0), r.getSeq[Float](1)))
+    val cents = readCentroids(spark, indexDir)
     val p = nearestCells(
         probes.select(col(idCol).as("id"), col(vecCol).as("vec")), cents, nprobe)
       .select(concat(lit("c"), col("cell").cast("string")).as("cell"),

@@ -50,8 +50,6 @@ import org.apache.spark.sql.functions._
   */
 object VectorPq {
 
-  private val PqTables = Seq("postings")
-
   /** The generation tables of a REFINABLE index (r19 — VERDICT r18 #5,
     * FAISS's IndexRefineFlat shape): alongside the cache-resident codes
     * the index keeps the exact (rotated-space) vectors in a second
@@ -62,7 +60,20 @@ object VectorPq {
     * codes; the flat table is the cold re-rank side.
     */
   private def pqTables(refinable: Boolean): Seq[String] =
-    if (refinable) Seq("postings", "vectors") else PqTables
+    if (refinable) PqStore.tables else Seq("postings")
+
+  /** The IVF-PQ index's lifecycle. The claim scan includes the refine
+    * vectors table (absent dirs scan as empty) and the tombstone table,
+    * so neither a refine write nor a delete can collide with an append's
+    * id. Compaction folds the refine vectors under the same mask as the
+    * codes — alive sets must agree or a refined search re-scores rows
+    * the codes no longer hold.
+    */
+  private val PqStore = graft.sources.StandingStore("IVF-PQ index",
+    "pqBuild", Seq("postings", "vectors"),
+    scanTables = Seq("postings", "vectors",
+      graft.sources.GenCommit.TombsTable),
+    fold = Vector.cellFold, optional = Set("vectors"))
 
   /** Build the IVF-PQ index at `indexDir` (replacing anything there):
     * coarse quantizer (`nlist` cells, shared training path with
@@ -197,47 +208,42 @@ object VectorPq {
     val flat: Array[Double] =
       padded.flatMap(_.flatMap(_.toIndexedSeq)).toArray
 
-    // ---- persist metadata (replace-on-build, the ivfBuild contract) --
-    val fs0 = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs0.delete(new org.apache.hadoop.fs.Path(indexDir), true)
-    val centSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cell",
-        c0.schema("id").dataType),
-      org.apache.spark.sql.types.StructField("cvec",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          cents.toIndexedSeq.map(t =>
-            org.apache.spark.sql.Row(t._1, t._2)), 1),
-        centSchema)
-      .write.mode("overwrite").parquet(s"$indexDir/centroids")
-    spark.range(1).select(lit(m).as("m"), lit(kEff).as("k"),
-        lit(sublen).as("sublen"), lit(dim).as("dim"),
-        lit(byResidual).as("residual"),
-        lit(perm.map(_.toSeq).orNull).cast("array<int>").as("perm"))
-      .write.mode("overwrite").parquet(s"$indexDir/pqmeta")
     import spark.implicits._
-    padded.zipWithIndex.flatMap { case (b, i) =>
-      b.zipWithIndex.map { case (cw, c) => (i, c, cw.toSeq) }
-    }.toDF("sub", "code", "cvec")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$indexDir/pqcodes")
+    PqStore.build(spark, indexDir, pqTables(refinable)) { path =>
+      // ---- persist metadata ----
+      Vector.writeCentroids(spark, indexDir, cents, c0.schema("id").dataType)
+      spark.range(1).select(lit(m).as("m"), lit(kEff).as("k"),
+          lit(sublen).as("sublen"), lit(dim).as("dim"),
+          lit(byResidual).as("residual"),
+          lit(perm.map(_.toSeq).orNull).cast("array<int>").as("perm"))
+        .write.mode("overwrite").parquet(s"$indexDir/pqmeta")
+      padded.zipWithIndex.flatMap { case (b, i) =>
+        b.zipWithIndex.map { case (cw, c) => (i, c, cw.toSeq) }
+      }.toDF("sub", "code", "cvec")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$indexDir/pqcodes")
+      // ---- encode + assign, generation 0 ----
+      stageGeneration(spark, c0, cents, flat, m, kEff, sublen, byResidual,
+        refinable, path)
+    }
+  }
 
-    // ---- encode + assign + publish as generation 0 ----
-    val tk = graft.sources.GenCommit.newToken()
-    encodePostings(spark, c0, cents, flat, m, kEff, sublen, byResidual)
+  /** Stage one generation of a shaped slice: its codes and, for a
+    * refinable index, its exact vectors in the SAME generation (codes
+    * without refine vectors would silently break re-ranking for exactly
+    * those rows).
+    */
+  private def stageGeneration(spark: SparkSession, shaped: DataFrame,
+      cents: Seq[(Any, Seq[Float])], flat: Array[Double], m: Int, kEff: Int,
+      sublen: Int, residual: Boolean, refinable: Boolean,
+      path: String => String): Unit = {
+    encodePostings(spark, shaped, cents, flat, m, kEff, sublen, residual)
       .write.mode("overwrite").partitionBy("cell")
-      .parquet(graft.sources.GenCommit
-        .stagePath(indexDir, 0L, "postings", tk))
+      .parquet(path("postings"))
     if (refinable)
-      exactVectors(spark, c0, cents)
+      exactVectors(spark, shaped, cents)
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(graft.sources.GenCommit
-          .stagePath(indexDir, 0L, "vectors", tk))
-    graft.sources.GenCommit.publish(spark, indexDir, 0L,
-      pqTables(refinable), tk)
+        .parquet(path("vectors"))
   }
 
   /** The refine table's content for a shaped slice: the exact
@@ -382,8 +388,7 @@ object VectorPq {
     val residual = residualOf(meta)
     val cbRows = spark.read.parquet(s"$indexDir/pqcodes").collect()
       .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2))).toMap
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-      .collect().toSeq.map(r => (r.get(0), r.getSeq[Float](1)))
+    val cents = Vector.readCentroids(spark, indexDir)
     val centByCell: Map[Any, Seq[Float]] = cents.toMap
     val p0raw = probes.select(col(idCol).as("id"),
       col(vecCol).cast("array<float>").as("vec"),
@@ -515,13 +520,6 @@ object VectorPq {
     }
   }
 
-  /** Claim-scan table set: includes the tombstone table so a delete
-    * generation can never collide with an append's id, and the refine
-    * vectors table (absent dirs scan as empty) for the same reason.
-    */
-  private val PqScanTables =
-    pqTables(refinable = true) :+ graft.sources.GenCommit.TombsTable
-
   /** Whether this index keeps the exact-vector refine table. */
   private def isRefinable(spark: SparkSession, indexDir: String): Boolean =
     new org.apache.hadoop.fs.Path(indexDir)
@@ -617,8 +615,7 @@ object VectorPq {
       vecCol: String = "embedding"): Unit = {
     graft.ext.GraftFunctions.ensureVecDot(spark)
     val (m, kEff, sublen, flat, residual) = loadPq(spark, indexDir)
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-      .collect().toSeq.map(r => (r.get(0), r.getSeq[Float](1)))
+    val cents = Vector.readCentroids(spark, indexDir)
     require(cents.nonEmpty, s"no centroids at $indexDir — build first")
     val d0raw = delta.select(col(idCol).as("id"),
       col(vecCol).cast("array<float>").as("vec"),
@@ -626,106 +623,39 @@ object VectorPq {
     // appended vectors enter the index's rotated space (OPQ)
     val d0 = permOf(spark.read.parquet(s"$indexDir/pqmeta").head())
       .map(applyPerm(d0raw, _)).getOrElse(d0raw)
-    val tk = graft.sources.GenCommit.newToken()
-    val gen = graft.sources.GenCommit.claimNextGen(spark, indexDir,
-      PqScanTables, token = tk)
-    encodePostings(spark, d0, cents, flat, m, kEff, sublen, residual)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(graft.sources.GenCommit
-        .stagePath(indexDir, gen, "postings", tk))
-    // a refinable index appends its flat vectors in the SAME generation
-    // (codes without refine vectors would silently break re-ranking for
-    // exactly the appended rows)
     val refinable = isRefinable(spark, indexDir)
-    if (refinable)
-      exactVectors(spark, d0, cents)
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(graft.sources.GenCommit
-          .stagePath(indexDir, gen, "vectors", tk))
-    graft.sources.GenCommit.publish(spark, indexDir, gen,
-      pqTables(refinable), tk, claimed = true)
+    PqStore.append(spark, indexDir, pqTables(refinable)) { path =>
+      stageGeneration(spark, d0, cents, flat, m, kEff, sublen, residual,
+        refinable, path)
+    }
   }
 
-  /** Tombstone delete — [[Vector.ivfDelete]] verbatim: one committed
-    * generation of removed ids; searches mask by the later-generation
-    * rule (free until a delete exists), delete-then-append revives,
-    * [[pqCompact]] folds.
+  /** Tombstone delete — [[graft.sources.StandingStore.delete]]: one
+    * committed generation of removed ids; searches mask by the
+    * later-generation rule (free until a delete exists),
+    * delete-then-append revives, [[pqCompact]] folds.
     */
   def pqDelete(
       spark: SparkSession,
       indexDir: String,
       ids: DataFrame,
-      idCol: String = "vec_id"): Unit = {
-    val tk = graft.sources.GenCommit.newToken()
-    val gen = graft.sources.GenCommit.claimNextGen(spark, indexDir,
-      PqScanTables, token = tk)
-    ids.select(col(idCol).as("id")).distinct()
-      .write.mode("overwrite")
-      .parquet(graft.sources.GenCommit.stagePath(indexDir, gen,
-        graft.sources.GenCommit.TombsTable, tk))
-    graft.sources.GenCommit.publish(spark, indexDir, gen,
-      Seq(graft.sources.GenCommit.TombsTable), tk, claimed = true)
-  }
+      idCol: String = "vec_id"): Unit =
+    PqStore.delete(spark, indexDir, ids, idCol)
 
-  /** Small-file compaction + tombstone fold — [[Vector.ivfCompact]]'s
-    * rename-aside swap applied to the compressed postings (one file per
-    * cell, alive rows only, frozen quantizer and codebooks, commit set
-    * reset to the highest id). Single-writer maintenance window.
+  /** Small-file compaction + tombstone fold — one file per cell, alive
+    * rows only, frozen quantizer and codebooks, the refine vectors folded
+    * beside the codes ([[graft.sources.StandingStore.compact]]).
+    * Single-writer maintenance window.
     */
-  def pqCompact(spark: SparkSession, indexDir: String): Unit = {
-    pqRecover(spark, indexDir)
-    graft.sources.GenCommit.gcStages(spark, indexDir)
-    val keepGen = graft.sources.GenCommit.lastCommitted(spark, indexDir)
-    def foldTable(table: String): Unit = {
-      graft.sources.GenCommit.maskTombstones(spark, indexDir,
-          graft.sources.GenCommit.committedTable(spark, indexDir,
-            table), "neighbor_id")
-        .drop("gen")
-        .repartition(col("cell"))
-        .withColumn("gen", lit(keepGen))
-        .write.mode("overwrite").partitionBy("gen", "cell")
-        .parquet(graft.sources.SwapDir.stagePath(indexDir, table))
-      graft.sources.SwapDir.swap(spark, indexDir, table)
-    }
-    foldTable("postings")
-    // the refine vectors fold under the same mask — alive sets must
-    // agree or a refined search re-scores rows the codes no longer hold
-    if (isRefinable(spark, indexDir)) foldTable("vectors")
-    graft.sources.GenCommit.dropTombs(spark, indexDir)
-    graft.sources.GenCommit.resetCommits(spark, indexDir, keepGen)
-  }
+  def pqCompact(spark: SparkSession, indexDir: String): Unit =
+    PqStore.compact(spark, indexDir)
 
-  /** The measured compact-now signal ([[graft.sources.GenCommit
-    * .shouldCompact]] over postings + tombstones).
+  /** Heal an interrupted [[pqCompact]] swap — [[graft.sources.SwapDir]]'s
+    * decision table; the refine table recovers only when any of its
+    * three swap states is on disk.
     */
-  def pqShouldCompact(spark: SparkSession, indexDir: String,
-      expectedReads: Int = 30): Boolean =
-    graft.sources.GenCommit.shouldCompact(spark, indexDir, PqScanTables,
-      expectedReads)
-
-  /** Heal an interrupted [[pqCompact]] swap — [[graft.sources.SwapDir
-    * .recover]]'s decision table, same as every compactor.
-    */
-  def pqRecover(spark: SparkSession, indexDir: String): Unit = {
-    graft.sources.SwapDir.recover(spark, indexDir, "postings",
-      s"pqRecover: no postings at $indexDir in any generation — " +
-        "the index is gone, rebuild with pqBuild")
-    // the refine table recovers only when it participates (any of its
-    // three swap states on disk) — a non-refinable index has none
-    val f = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vStates = Seq("vectors", "vectors_old",
-      graft.sources.SwapDir.stagePath(indexDir, "vectors")
-        .split('/').last)
-    if (vStates.exists(n => f.exists(
-        new org.apache.hadoop.fs.Path(s"$indexDir/$n"))))
-      graft.sources.SwapDir.recover(spark, indexDir, "vectors",
-        s"pqRecover: refine vectors at $indexDir lost in every swap " +
-          "state — rebuild with pqBuild(refinable = true)")
-    graft.sources.SwapDir.recover(spark, indexDir, "commits",
-      s"pqRecover: no commit set at $indexDir in any generation — " +
-        "the index is gone, rebuild with pqBuild")
-  }
+  def pqRecover(spark: SparkSession, indexDir: String): Unit =
+    PqStore.recover(spark, indexDir)
 
   /** Driver-side L2 k-means over one subspace's sampled values:
     * deterministic farthest-point init from the (hash-ordered) sample's

@@ -619,7 +619,7 @@ object GenCommit {
     * leftovers of crashed appends and fencing losers. Only safe inside
     * a compaction's maintenance window (no live writer may be mid-stage
     * — the same single-writer contract the compactors already carry);
-    * both compactors call it on entry.
+    * [[StandingStore.compact]] calls it on entry.
     */
   def gcStages(spark: SparkSession, indexDir: String): Unit = {
     val f = fsOf(spark, indexDir)
@@ -631,7 +631,7 @@ object GenCommit {
 
   /** Compaction support: atomically replace the commit set with the
     * single generation `gen` (SwapDir on the commits dir — crash-safe
-    * like the table swaps it follows; see the compactors for the
+    * like the table swaps it follows; see [[StandingStore]] for the
     * window-by-window consistency argument).
     *
     * Claim files are wiped with the rest of the old commit set. That

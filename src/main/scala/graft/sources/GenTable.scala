@@ -1711,13 +1711,15 @@ object GenTable {
     * a merge that died mid-publish — gen dir renamed in, marker never
     * created — burned its snapshot+1 claim, bricking a CDC stream's
     * replay until a full [[compact]]; this is the metadata-cost remedy).
-    * Sweeps orphan stage dirs, releases pre-stage claims
-    * ([[recoverClaims]]), then ROLLS BACK every claimed-but-uncommitted
-    * generation that began publishing: its gen dir (data and tombs
-    * alike) and manifest are deleted and the claim released — safe
-    * because an unmarked generation is invisible to every reader (the
-    * protocol's whole point), so deleting it cannot change any view,
-    * and the writer that staged it is dead by the caller's contract.
+    * Sweeps orphan stage dirs and the temp files of writers killed
+    * before their rename (`.zbounds.tmp_*`, `logckpts/.tmp_*`),
+    * releases pre-stage claims ([[recoverClaims]]), then ROLLS BACK
+    * every claimed-but-uncommitted generation that began publishing:
+    * its gen dir (data and tombs alike) and manifest are deleted and
+    * the claim released — safe because an unmarked generation is
+    * invisible to every reader (the protocol's whole point), so deleting
+    * it cannot change any view, and the writer that staged it is dead by
+    * the caller's contract.
     *
     * ONLY safe when no other writer is mid-flight — a LIVE claimant
     * between rename and marker looks identical to a crashed one. Held
@@ -1730,6 +1732,13 @@ object GenTable {
   def recover(spark: SparkSession, dir: String): Seq[Long] = {
     GenCommit.gcStages(spark, dir)
     val f = fsOf(spark, dir)
+    Seq(dir -> ".zbounds.tmp_", s"$dir/logckpts" -> ".tmp_").foreach {
+      case (d, prefix) =>
+        val p = new org.apache.hadoop.fs.Path(d)
+        if (f.exists(p)) f.listStatus(p)
+          .filter(_.getPath.getName.startsWith(prefix))
+          .foreach(t => f.delete(t.getPath, false))
+    }
     val marked = GenCommit.committed(spark, dir).toSet
     val stale = GenCommit.claimedGens(spark, dir).filterNot(marked)
     val freed = stale.sorted.map { g =>

@@ -3,10 +3,10 @@ package graft.sources
 import org.apache.spark.sql.SparkSession
 
 /** Crash-safe directory replacement for materialized index generations —
-  * the rename-aside swap shared by the IVF postings compactor
-  * ([[graft.ops.Vector.ivfCompact]]) and the text-LSH index compactor
-  * ([[graft.ops.Text.lshCompact]]). Single-writer semantics; see the
-  * callers' scaladoc for the maintenance-window contract.
+  * the rename-aside swap of [[StandingStore]]'s compaction, which every
+  * standing store's compactor runs (and of [[GenCommit.resetCommits]]).
+  * Single-writer semantics; see [[StandingStore]] for the
+  * maintenance-window contract.
   *
   * Protocol (live = `root/<name>`, stage = `root/<name>_compacting`,
   * old = `root/<name>_old`):
@@ -17,8 +17,8 @@ import org.apache.spark.sql.SparkSession
   * before (1) leaves live untouched; between (1) and (2) the new set is
   * complete at stage and the old at old (roll FORWARD); after (2) only
   * the stale old lingers (cleanup). [[recover]] heals all three states
-  * and both compactors run it on entry, so a crashed swap self-heals on
-  * the next maintenance run.
+  * and [[StandingStore.compact]] runs it on entry, so a crashed swap
+  * self-heals on the next maintenance run.
   *
   * Renames go through the Hadoop FileSystem API so the swap works on any
   * rename-capable store (HDFS, local, S3A with a committer layer — raw

@@ -10,6 +10,12 @@ class PlanSpec extends SparkSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan.toString
 
+  /** Every declared query's plan, planned once and shared by the two
+    * all-query audits below.
+    */
+  private lazy val allPlans: Map[String, String] =
+    SparkEntry.queries.keys.map(n => n -> plan(n)).toMap
+
   /** Plan after execution — collect() drives THIS queryExecution, so AQE
     * finalizes in place and codegen stage markers become visible. (A write
     * would build a separate execution and leave this plan un-finalized.)
@@ -149,8 +155,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("no declared or extension query contains a cartesian product") {
-    SparkEntry.queries.keys.foreach { name =>
-      val p = plan(name)
+    allPlans.foreach { case (name, p) =>
       assert(!p.contains("CartesianProduct"),
         s"$name has a cartesian product — never acceptable at scale")
     }
@@ -172,15 +177,15 @@ class PlanSpec extends SparkSuite {
     val nlAllowed = Set("x01_vector_cosine", "q60_search_quantized",
       "q73_vocab_coverage", "q78_ks_test", "x18_sketch_columns",
       "x20_embed_decontaminate")
-    SparkEntry.queries.keys.filterNot(nlAllowed).foreach { n =>
-      assert(!plan(n).contains("BroadcastNestedLoopJoin"),
+    allPlans.keys.filterNot(nlAllowed).foreach { n =>
+      assert(!allPlans(n).contains("BroadcastNestedLoopJoin"),
         s"$n uses a nested-loop join")
     }
-    assert(plan("x01_vector_cosine").contains("BroadcastNestedLoopJoin"))
+    assert(allPlans("x01_vector_cosine").contains("BroadcastNestedLoopJoin"))
     // x20b is the BUCKETED declared alternative to x20's whitelisted BNLJ
     // (VERDICT r11 #3): same oracle, but the pair source must be a hash
     // equi-join on the IVF cell — the scalable shape — not a nested loop
-    val p20b = plan("x20b_embed_decontaminate_bucketed")
+    val p20b = allPlans("x20b_embed_decontaminate_bucketed")
     assert(p20b.contains("BroadcastHashJoin"),
       s"x20b must equi-join on the cell key:\n$p20b")
   }

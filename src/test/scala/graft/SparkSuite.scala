@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared test harness: one local[2] session per forked test JVM, configured
-  * identically to the Verify/Bench builders (UTC, ns-as-long, small shuffle).
+/** Shared test harness: one local[2] session per forked test JVM, built by
+  * [[Session]] like the Verify/Bench sessions (UTC, ns-as-long, small shuffle).
   */
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
@@ -14,16 +14,9 @@ trait SparkSuite extends AnyFunSuite {
 }
 
 object SparkSuite {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[2]")
+  lazy val session: SparkSession = Session.builder("2")
     .appName("graft-test")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh_").toString)
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.sessionWindow.merge.sessions.in.local.partition", "true")
-    .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
