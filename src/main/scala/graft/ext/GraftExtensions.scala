@@ -688,6 +688,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         GraftFunctions.bucketRankBuilder _))
     ext.injectOptimizerRule(_ => EliminateIdentityConvert)
     ext.injectHintResolutionRule(ResolveGenTablePath)
+    // a broadcast of driver-held rows (the day's rates) launches no job
+    ext.injectColumnar(_ =>
+      new org.apache.spark.sql.execution.DriverLocalBroadcastRule)
     // OPTIMIZE / VACUUM maintenance verbs (r19) — everything else
     // delegates to Spark's parser verbatim
     ext.injectParser((session, delegate) => GraftSqlParser(session, delegate))

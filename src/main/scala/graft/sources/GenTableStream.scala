@@ -143,11 +143,11 @@ class GenTableStream(spark: SparkSession, dir: String, partCol: String,
   }
 
   /** One generation's change rows, in the stream schema. */
-  private def genFrame(g: Long): DataFrame = {
+  private[graft] def genFrame(g: Long): DataFrame = {
     val tombDir = new org.apache.hadoop.fs.Path(
       s"$dir/${GenCommit.TombsTable}/gen=$g")
     if (fs.exists(tombDir)) {
-      val tombs = spark.read.parquet(tombDir.toString)
+      val tombs = ParquetSchema.read(spark, tombDir.toString)
       val cols = tableFields.map { fl =>
         (if (tombs.columns.contains(fl.name)) col(fl.name)
          else lit(null)).cast(fl.dataType).as(fl.name)
@@ -178,7 +178,7 @@ class GenTableStream(spark: SparkSession, dir: String, partCol: String,
     * — multiplicities line up because every physical row inserts once
     * and deletes at most once before re-inserting.
     */
-  private def rowFrame(g: Long, committed: Seq[Long]): DataFrame = {
+  private[graft] def rowFrame(g: Long, committed: Seq[Long]): DataFrame = {
     val prev = committed.filter(_ < g).maxOption
     def aligned(df: DataFrame): DataFrame = df.select(
       tableFields.map { fl =>
@@ -202,7 +202,7 @@ class GenTableStream(spark: SparkSession, dir: String, partCol: String,
       // NULL-keyed tombstone are the NULL-keyed rows, which an EqualTo
       // semi-join misses — downstream consumers would never see those
       // deletes (consistently wrong with the read mask's old bug)
-      val tombs = spark.read.parquet(tombDir.toString)
+      val tombs = ParquetSchema.read(spark, tombDir.toString)
       tag(GenTable.nullSafeKeyJoin(preState, tombs,
         tombs.columns.toSeq, "left_semi"), "delete")
     } else {

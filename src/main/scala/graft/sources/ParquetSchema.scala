@@ -33,6 +33,18 @@ object ParquetSchema {
       file: org.apache.hadoop.fs.FileStatus): Option[StructType] =
     FooterSchema.ofFile(spark, file)
 
+  /** The data files a read of `path` scans, in path order, listed on
+    * the driver with Spark's own hidden-file rule. Paths are qualified.
+    */
+  def dataFiles(spark: SparkSession, path: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    FooterSchema.dataFiles(spark, path)
+
+  /** The row count `file`'s footer records, read on the driver. */
+  def rowCount(spark: SparkSession,
+      file: org.apache.hadoop.fs.FileStatus): Long =
+    FooterSchema.rowCount(spark, file)
+
   /** `spark.read.parquet(path)`, with the schema read on the driver. */
   def read(spark: SparkSession, path: String): DataFrame =
     of(spark, path) match {

@@ -100,6 +100,12 @@ object RatesDim {
   /** Day-memoized, EUR-rebased rates dimension (R17+R18). `resolve` hits
     * the provider only on a memo miss for that day; replays and retries
     * within the day are free, mirroring the reference's API-call budget.
+    *
+    * Each day's rates are collected once, by the day's first `resolve`,
+    * and handed out as one local relation: every later `resolve` of the
+    * day returns that same frame, and a conversion's broadcast of it is
+    * built on the driver ([[org.apache.spark.sql.execution
+    * .DriverLocalBroadcast]]) — an hourly batch pays no rates job.
     */
   final class DailyCachedRates(
       spark: SparkSession, storeDir: String, provider: RatesProvider) {
@@ -107,9 +113,21 @@ object RatesDim {
     /** Provider invocations, for tests asserting the once-per-day budget. */
     @volatile var fetchCount: Int = 0
 
+    private val frames =
+      new java.util.concurrent.ConcurrentHashMap[LocalDate, DataFrame]()
+
     private def memoPath(day: LocalDate) = s"$storeDir/day=$day"
 
-    def resolve(day: LocalDate): DataFrame = {
+    /** The day's rates: one frame per day, collected from the memo store. */
+    def resolve(day: LocalDate): DataFrame =
+      frames.computeIfAbsent(day, d => {
+        val stored = ParquetSchema.read(spark, memoized(d))
+        spark.createDataFrame(
+          java.util.Arrays.asList(stored.collect(): _*), stored.schema)
+      })
+
+    /** The day's memo directory, fetched from the provider if missing. */
+    private def memoized(day: LocalDate): String = {
       val path = memoPath(day)
       // All memo-store probes go through the Hadoop FileSystem API so the
       // store may be hdfs://, s3a:// or file: — a java.io.File check against
@@ -136,7 +154,7 @@ object RatesDim {
         rebased.toDF("currency", "rate")
           .coalesce(1).write.mode("overwrite").parquet(path)
       }
-      ParquetSchema.read(spark, path)
+      path
     }
 
     /** Rates ready for the conversion join: broadcast-hinted. */

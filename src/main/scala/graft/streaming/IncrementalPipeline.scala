@@ -1,12 +1,14 @@
 package graft.streaming
 
 import graft.ops.Convert
-import graft.sources.ParquetSchema
+import graft.sources.{GenCommit, ParquetSchema}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.StreamingQuery
 import java.sql.Timestamp
+import scala.util.{Failure, Success, Try}
 
 /** x04_stream_incremental: the reference pipeline's core semantics —
   * "pick up unprocessed rows, convert, append, mark processed, exactly
@@ -22,7 +24,11 @@ import java.sql.Timestamp
   *    append first, ledger second): a crash between the two re-delivers the
   *    batch (at-least-once), and the target PK that deduped replays in the
   *    reference (`init/postgres-2/init.sql:2`, §2.1.6) → [[targetView]]'s
-  *    keep-first dedup on order_id (exactly-once effect via idempotency);
+  *    keep-first dedup on order_id (exactly-once effect via idempotency).
+  *    The ledger append is WRITTEN while the target append runs, into the
+  *    ledger's hidden `_staging/<token>` directory, and PUBLISHED (its part
+  *    file renamed into the ledger) only after the target append returns —
+  *    the order holds, and the two writes overlap;
   *  - `LIMIT 30000` batch cap (:91) → deterministic `orderBy.limit` pick;
   *  - hourly schedule (:14) → either driver-looped [[runBatch]] or the
   *    [[stream]] form with a micro-batch trigger + checkpoint.
@@ -34,12 +40,32 @@ import java.sql.Timestamp
   * source partitions are immutable-and-complete) exactly like any
   * streaming state store.
   *
-  * Fixed per-batch costs: an hourly batch is at most 30,000 rows, so its
-  * latency is set by per-operation overhead, not data volume. The
-  * source, ledger and target frames take their schemas from one footer
-  * read on the driver ([[graft.sources.ParquetSchema]]) rather than the
-  * one-task inference job a schema-less `spark.read.parquet` launches:
-  * building them costs file listings and one footer read each, no job.
+  * Consumed record: [[runBatch]] keeps, in the ledger's hidden
+  * `_consumed/` directory, one line per source file it has fully consumed
+  * (relative path, length, modification time), written by temp file +
+  * rename after the ledger publish. A batch lists the source with Spark's
+  * leaf-listing rules and reads only the files not recorded, so each
+  * source row is read once, not once per batch of history. A file is
+  * recorded only when the batch took every fresh row it holds — the
+  * candidates' footers count at most the cap, or fewer rows than the cap
+  * were picked — so a backlog over the cap stays unrecorded until it
+  * drains. Every row of a recorded file is in the ledger; a file
+  * rewritten in place has a new length or time and is read again, its
+  * ledgered ids still anti-joined away. [[compactLedger]] carries the
+  * record into the compacted ledger as one file. Records of source files
+  * deleted later stay until the ledger is rebuilt.
+  *
+  * Per-batch cost: an hourly batch is at most 30,000 rows, so its
+  * latency is set by fixed per-operation work, not data volume. A batch
+  * reads its new files once, runs no top-K when they cannot exceed the
+  * cap, overlaps the two appends, and joins the day's rates as a local
+  * relation whose broadcast launches no job. Its frames take their
+  * schemas from footer reads on the driver
+  * ([[graft.sources.ParquetSchema]]), not the inference job a
+  * schema-less `spark.read.parquet` launches. An idle tick — no new
+  * source file — lists two directories and launches no job. What still
+  * grows with history is the ledger side of the anti-join: the whole
+  * ledger is broadcast on every batch.
   */
 object IncrementalPipeline {
 
@@ -65,18 +91,27 @@ object IncrementalPipeline {
     * NOTE: the compaction swap relies on `rename`; on object stores without
     * atomic rename (raw S3) use a rename-capable committer/locking layer.
     */
-  private def fsFor(spark: SparkSession, path: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
+  private def fsFor(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  /** `dir` read as parquet; empty, with `like`'s schema, when it holds no
+    * data file — missing, or a ledger whose first batch died after
+    * staging.
+    */
   private[graft] def readParquetOrEmpty(spark: SparkSession, dir: String, like: DataFrame): DataFrame = {
+    // a local empty relation: the optimizer drops an anti-join against it
+    def empty = spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), like.schema)
     val (fs, p) = fsFor(spark, dir)
-    if (fs.exists(p))
-      ParquetSchema.read(spark, dir)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        like.schema)
+    if (!fs.exists(p)) empty
+    else ParquetSchema.of(spark, dir) match {
+      case Some(s) => spark.read.schema(s).parquet(dir)
+      case None if ParquetSchema.dataFiles(spark, dir).nonEmpty =>
+        spark.read.parquet(dir)
+      case None => empty
+    }
   }
 
   /** Convert one picked batch to the orders_eur target shape
@@ -103,6 +138,12 @@ object IncrementalPipeline {
     * the ledger, so an already-ledgered order is never converted twice, and
     * a crash after the target append but before the ledger append only
     * duplicates rows that [[targetView]] dedups by order_id.
+    *
+    * Only the source files the consumed record does not list are read
+    * (see the object doc). When their footers hold at most `maxBatch`
+    * rows, every fresh row is the pick: the batch is the plain anti-join,
+    * with no top-K. Otherwise it is [[pickup]] over those files. Either
+    * way the target and ledger each get one file, ordered by order_id.
     */
   def runBatch(
       spark: SparkSession,
@@ -117,27 +158,146 @@ object IncrementalPipeline {
       // the SAME pickup→target-append→ledger-append transaction; the
       // default stays the reference-exact divide form
       convert: (DataFrame, DataFrame, Timestamp) => DataFrame = convertBatch): BatchResult = {
-    recoverLedger(spark, ledgerDir) // repair an interrupted compaction swap
-    val source = ParquetSchema.read(spark, sourceDir)
+    recoverLedger(spark, ledgerDir) // repair an interrupted batch or swap
+    val (fs, led) = fsFor(spark, ledgerDir)
+    val consumed = readConsumed(fs, led)
+    val (srcFs, src) = fsFor(spark, sourceDir)
+    require(srcFs.exists(src), s"source directory $sourceDir does not exist")
+    val root = srcFs.makeQualified(src).toUri
+    val unread = ParquetSchema.dataFiles(spark, sourceDir)
+      .map(f => consumedLine(root, f) -> f).filterNot(e => consumed(e._1))
+    if (unread.isEmpty) return BatchResult(0, 0) // idle tick: no job
+    val files = unread.map(_._2)
+
+    val source = readFiles(spark, sourceDir, files)
     val ledger = readParquetOrEmpty(spark, ledgerDir,
       source.select(col("order_id"), lit(batchTs).as("processed_at")))
-
+    // the footers' row count bounds the fresh rows; summing stops at the cap
+    val underCap = files.iterator.map(ParquetSchema.rowCount(spark, _))
+      .scanLeft(0L)(_ + _).forall(_ <= maxBatch)
     // R2+R3: unprocessed pickup, capped — deterministic order (D1) instead
-    // of the reference's bare LIMIT; the q46-declared primitive
-    val picked = pickup(source, ledger, "order_id", maxBatch)
-      .cache()
+    // of the reference's bare LIMIT; the q46-declared primitive when the
+    // cap can bind, every fresh row (no top-K) when it cannot
+    val picked = (
+      if (underCap) source.join(ledger.select("order_id"), Seq("order_id"),
+        "left_anti")
+      else pickup(source, ledger, "order_id", maxBatch)).cache()
     try {
-      val nPicked = picked.count()
-      if (nPicked == 0) return BatchResult(0, 0) // R6 early exit
-
-      // commit order mirrors the reference (:156-157): target THEN ledger
-      convert(picked, rates, batchTs)
-        .write.mode("append").parquet(targetDir)
-      picked.select(col("order_id"), lit(batchTs).as("processed_at"))
-        .write.mode("append").parquet(ledgerDir)
+      // one job fills the cache and counts it; Dataset.count would add
+      // an aggregate's shuffle map and reduce jobs
+      val nPicked = picked.queryExecution.toRdd.count()
+      if (nPicked > 0)
+        append(spark,
+          oneOrderedFile(convert(picked, rates, batchTs)),
+          oneOrderedFile(picked.select(col("order_id"),
+            lit(batchTs).as("processed_at"))),
+          targetDir, ledgerDir)
+      // R6: an empty batch appends nothing; its files are still consumed
+      if (underCap || nPicked < maxBatch)
+        writeConsumed(fs, new Path(led, ConsumedDir), unread.map(_._1),
+          GenCommit.newToken())
       BatchResult(nPicked, nPicked)
-    } finally picked.unpersist() // incl. early return — a scheduler polling
-    // a drained source must not leak one cache entry per tick
+    } finally picked.unpersist() // a scheduler polling a drained source
+    // must not leak one cache entry per tick
+  }
+
+  /** One output file per batch, rows in order_id order. The sort sits
+    * above the conversion join, where the optimizer keeps it.
+    */
+  private def oneOrderedFile(df: DataFrame): DataFrame =
+    df.coalesce(1).sortWithinPartitions("order_id")
+
+  /** `files` (data files under `sourceDir`) as one frame: the schema from
+    * the footer Spark's inference would pick, partition columns from the
+    * directories below `sourceDir`.
+    */
+  private def readFiles(spark: SparkSession, sourceDir: String,
+      files: Seq[FileStatus]): DataFrame = {
+    val reader = spark.read.option("basePath", sourceDir)
+    val paths = files.map(_.getPath.toString)
+    ParquetSchema.ofFile(spark, files.minBy(_.getPath.toString)) match {
+      case Some(s) => reader.schema(s).parquet(paths: _*)
+      case None => reader.parquet(paths: _*)
+    }
+  }
+
+  /** The target append, with the ledger append staged alongside it.
+    *
+    * The ledger rows are written on a second thread into a hidden
+    * `_staging/<token>` directory of the ledger while this thread appends
+    * the target. Only after the target append has returned are the staged
+    * part files renamed into the ledger, so the commit order stays the
+    * reference's (target, then ledger; `:156-157`) and the crash window
+    * stays the one [[targetView]] absorbs. A failure of either write
+    * fails the call after both have finished; whatever was staged is
+    * left for [[recoverLedger]] to sweep. The second thread is started
+    * from this one and inherits its Spark local properties, so its jobs
+    * belong to the caller's job group and SQL execution.
+    */
+  private def append(spark: SparkSession, target: DataFrame,
+      ledgerRows: DataFrame, targetDir: String, ledgerDir: String): Unit = {
+    val (fs, led) = fsFor(spark, ledgerDir)
+    val stage = new Path(led, s"$StagingDir/${GenCommit.newToken()}")
+    var staged: Try[Unit] =
+      Failure(new IllegalStateException("ledger staging did not finish"))
+    val stager = new Thread(() => staged =
+      try Success(ledgerRows.write.parquet(stage.toString))
+      catch { case t: Throwable => Failure(t) }, "ledger-staging")
+    stager.setDaemon(true)
+    stager.start()
+    val wrote = Try(target.write.mode("append").parquet(targetDir))
+    stager.join()
+    wrote.get
+    staged.get
+    fs.listStatus(stage).map(_.getPath).filter(p => visible(p.getName))
+      .foreach { p =>
+        require(fs.rename(p, new Path(led, p.getName)),
+          s"could not publish staged ledger file $p")
+      }
+    fs.delete(stage.getParent, true)
+  }
+
+  /** Spark's data-file rule: names starting `_` or `.` are hidden. */
+  private def visible(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
+
+  /** The ledger's hidden side directories: staged appends, and the
+    * record of fully consumed source files.
+    */
+  private val StagingDir = "_staging"
+  private val ConsumedDir = "_consumed"
+
+  /** One consumed-record line: the file's path relative to the source
+    * root (URI-encoded, so free of tabs and newlines), its length and its
+    * modification time. A file rewritten in place gets a new line.
+    */
+  private def consumedLine(root: java.net.URI, f: FileStatus): String =
+    s"${root.relativize(f.getPath.toUri).getRawPath}\t${f.getLen}\t" +
+      s"${f.getModificationTime}"
+
+  private def listOrEmpty(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq
+    catch { case _: java.io.FileNotFoundException => Nil }
+
+  /** Every line of the ledger's consumed record. */
+  private def readConsumed(fs: FileSystem, led: Path): Set[String] =
+    listOrEmpty(fs, new Path(led, ConsumedDir))
+      .filter(s => visible(s.getPath.getName))
+      .flatMap(s => GenCommit.readSmallFile(fs, s.getPath).split("\n"))
+      .filter(_.nonEmpty).toSet
+
+  /** Add `lines` to a consumed record as one file named `name`, written
+    * by temp file + rename so a reader never sees half a record.
+    */
+  private def writeConsumed(fs: FileSystem, dir: Path, lines: Seq[String],
+      name: String): Unit = {
+    val tmp = new Path(dir, s".tmp-$name")
+    val out = fs.create(tmp, true)
+    try out.write(lines.map(_ + "\n").mkString
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    require(fs.rename(tmp, new Path(dir, name)),
+      s"could not publish consumed record $tmp")
   }
 
   /** Rewrite the append-only ledger as range-sorted multi-file output. The
@@ -157,13 +317,16 @@ object IncrementalPipeline {
     * one not yet in place — by restoring the backup. Losing the ledger
     * would silently re-deliver the entire source; duplicates would still
     * collapse in [[targetView]], but the recompute is the failure to avoid.
+    * The consumed record is merged into the compacted copy before the
+    * swap, so whichever ledger the swap leaves live carries it.
     */
   def compactLedger(spark: SparkSession, ledgerDir: String): Unit = {
     recoverLedger(spark, ledgerDir)
     val (fs, dir) = fsFor(spark, ledgerDir)
-    if (!fs.exists(dir)) return
-    val tmp = new org.apache.hadoop.fs.Path(ledgerDir + ".compact")
-    val bak = new org.apache.hadoop.fs.Path(ledgerDir + ".old")
+    if (!fs.exists(dir) || ParquetSchema.dataFiles(spark, ledgerDir).isEmpty)
+      return
+    val tmp = new Path(ledgerDir + ".compact")
+    val bak = new Path(ledgerDir + ".old")
     // stale leftovers from an interrupted prior attempt
     fs.delete(tmp, true); fs.delete(bak, true)
     // size from filesystem METADATA, not a count() job — a billions-of-ids
@@ -176,6 +339,11 @@ object IncrementalPipeline {
       (bytes / (128L << 20)).toInt + 1))
     compactionLayout(ParquetSchema.read(spark, ledgerDir), nFiles)
       .write.mode("overwrite").parquet(tmp.toString)
+    // the consumed record rides along, merged into one file
+    val consumed = readConsumed(fs, dir)
+    if (consumed.nonEmpty)
+      writeConsumed(fs, new Path(tmp, ConsumedDir), consumed.toSeq.sorted,
+        GenCommit.newToken())
     require(fs.rename(dir, bak), s"could not move $ledgerDir aside")
     require(fs.rename(tmp, dir), s"could not activate compacted ledger; " +
       s"backup preserved at $bak")
@@ -194,13 +362,23 @@ object IncrementalPipeline {
 
   /** Repair an interrupted [[compactLedger]] swap: if the live ledger is
     * missing but its backup exists, the backup IS the ledger — restore it.
+    * Then sweep what a batch killed mid-commit leaves: its staged ledger
+    * append (never published, so its ids are simply picked again) and a
+    * consumed-record temp file. Single-writer contract: only safe while
+    * no batch or compaction of this ledger is running.
     */
   def recoverLedger(spark: SparkSession, ledgerDir: String): Unit = {
     val (fs, dir) = fsFor(spark, ledgerDir)
-    val bak = new org.apache.hadoop.fs.Path(ledgerDir + ".old")
-    if (!fs.exists(dir) && fs.exists(bak)) {
-      require(fs.rename(bak, dir), s"could not restore ledger backup $bak")
+    val bak = new Path(ledgerDir + ".old")
+    if (!fs.exists(dir)) {
+      if (fs.exists(bak))
+        require(fs.rename(bak, dir), s"could not restore ledger backup $bak")
+      else return
     }
+    fs.delete(new Path(dir, StagingDir), true)
+    listOrEmpty(fs, new Path(dir, ConsumedDir))
+      .map(_.getPath).filter(_.getName.startsWith(".tmp-"))
+      .foreach(fs.delete(_, false))
   }
 
   /** The target with PK semantics enforced on read: keep-first per
@@ -217,8 +395,9 @@ object IncrementalPipeline {
   }
 
   /** Streaming form: micro-batches through foreachBatch with the same
-    * idempotent append. The checkpoint replays an unacknowledged batch on
-    * restart (at-least-once). Replay semantics, stated precisely: if the
+    * idempotent, staged append as [[runBatch]] (no consumed record: the
+    * stream's source offsets live in its checkpoint). The checkpoint
+    * replays an unacknowledged batch on restart (at-least-once). Replay semantics, stated precisely: if the
     * crash hit BEFORE the target append committed, the ledger anti-join
     * makes the replay a clean re-run; if it hit BETWEEN the target append
     * and the ledger append (the same window [[runBatch]] documents), the
@@ -246,18 +425,17 @@ object IncrementalPipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val ts = batchTs
+        recoverLedger(spark, ledgerDir) // a killed micro-batch's staging
         val ledger = readParquetOrEmpty(spark, ledgerDir,
           batch.select(col("order_id"), lit(ts).as("processed_at")))
         val fresh = batch
           .join(ledger.select("order_id"), Seq("order_id"), "left_anti")
           .cache()
         try {
-          if (!fresh.isEmpty) {
-            convert(fresh, rates, ts)
-              .write.mode("append").parquet(targetDir)
-            fresh.select(col("order_id"), lit(ts).as("processed_at"))
-              .write.mode("append").parquet(ledgerDir)
-          }
+          if (!fresh.isEmpty)
+            append(spark, convert(fresh, rates, ts),
+              fresh.select(col("order_id"), lit(ts).as("processed_at")),
+              targetDir, ledgerDir)
         } finally fresh.unpersist() // incl. write failure — the checkpoint
         // replays the batch and would otherwise leak one cache entry per retry
         ()

@@ -11,6 +11,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
+import scala.jdk.CollectionConverters._
 
 /** Spark's own non-merging parquet schema inference, run on the DRIVER.
   *
@@ -49,11 +50,7 @@ object FooterSchema {
         SparkHadoopUtil.get.isGlobPath(new Path(path)) ||
         FileStreamSink.hasMetadata(Seq(path), hadoopConf, conf))
       return None
-    val leaves = HadoopFSUtils.parallelListLeafFiles(spark.sparkContext,
-      Seq(new Path(path)), hadoopConf, filter = null,
-      ignoreMissingFiles = conf.ignoreMissingFiles, ignoreLocality = true,
-      parallelismThreshold = Int.MaxValue, parallelismMax = 1)
-      .flatMap(_._2).sortBy(_.getPath.toString)
+    val leaves = leafFiles(spark, new Path(path), hadoopConf)
     // ParquetUtils.inferSchema's non-merging choice: a summary file
     // first, else the first data file in path order
     val summaries = Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
@@ -63,6 +60,38 @@ object FooterSchema {
       .orElse(leaves.find(f => !summaries(f.getPath.getName)))
       .flatMap(readFooter(spark, hadoopConf, _))
   }
+
+  /** The files Spark's reader scans under `path`: its leaf listing
+    * (hidden files and directories skipped), minus the summary files,
+    * in path order. Listed on the driver, whatever the directory count.
+    */
+  def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val hadoopConf = classic(spark).sessionState.newHadoopConf()
+    val qualified = p.getFileSystem(hadoopConf).makeQualified(p)
+    // PartitioningAwareFileIndex's data-path rule
+    leafFiles(spark, qualified, hadoopConf).filter { f =>
+      val n = f.getPath.getName
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith("."))
+    }
+  }
+
+  /** The row count one data file's footer records. */
+  def rowCount(spark: SparkSession, file: FileStatus): Long = {
+    val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(
+      file, classic(spark).sessionState.newHadoopConf()),
+      ParquetMetadataConverter.NO_FILTER)
+    meta.getBlocks.asScala.map(_.getRowCount).sum
+  }
+
+  private def leafFiles(spark: SparkSession, path: Path,
+      hadoopConf: org.apache.hadoop.conf.Configuration): Seq[FileStatus] =
+    HadoopFSUtils.parallelListLeafFiles(spark.sparkContext, Seq(path),
+      hadoopConf, filter = null,
+      ignoreMissingFiles = classic(spark).sessionState.conf.ignoreMissingFiles,
+      ignoreLocality = true, parallelismThreshold = Int.MaxValue,
+      parallelismMax = 1)
+      .flatMap(_._2).sortBy(_.getPath.toString)
 
   /** The data schema of one known data file — the choice `ofPath` makes,
     * for a caller that already holds the file.

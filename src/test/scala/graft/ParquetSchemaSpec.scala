@@ -1,12 +1,10 @@
 package graft
 
-import graft.sources.{GenCommit, GenTable, ParquetSchema}
+import graft.sources.{GenCommit, GenTable, GenTableStream, ParquetSchema}
 import graft.streaming.{IncrementalPipeline => IP}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import scala.jdk.CollectionConverters._
 
 /** Driver-side parquet schemas ([[ParquetSchema]]): the schema equals
   * Spark's own inference, building the table, tombstone and pipeline
@@ -27,40 +25,6 @@ class ParquetSchemaSpec extends SparkSuite {
 
   private def rates =
     Seq(("EUR", 1.0), ("USD", 1.1), ("GBP", 0.85)).toDF("currency", "rate")
-
-  /** The stage names of every Spark job `f` launches on this thread:
-    * jobs are matched by a private job group, and a marker job run
-    * after `f` drains the listener queue (events arrive in order).
-    */
-  private def jobsDuring(f: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val group = s"parquet-schema-spec-${java.util.UUID.randomUUID}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val props = e.properties
-        if (props != null && props.getProperty("spark.jobGroup.id") == group) {
-          if (props.getProperty("spark.job.description") == "marker")
-            drained.countDown()
-          else seen.add(e.stageInfos.map(_.name).mkString("; "))
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "counted")
-    try {
-      f
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the marker job never reached the listener")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    seen.asScala.toSeq
-  }
 
   /** A GenTable with one tombstone generation, and a pipeline that ran
     * one batch: (table dir, source, target, ledger).
@@ -136,6 +100,12 @@ class ParquetSchemaSpec extends SparkSuite {
   test("building GenTable.read, GenCommit.committedTable and the " +
       "pipeline's source, ledger and target frames launches no Spark job") {
     val (dir, src, tgt, led) = written()
+    // the change-stream frames of the tombstone generation, both
+    // granularities
+    val committed = GenCommit.committed(spark, dir)
+    val tombGen = committed.max
+    val genStream = new GenTableStream(spark, dir, "p")
+    val rowStream = new GenTableStream(spark, dir, "p", rowGranularity = true)
     var frames = Seq.empty[org.apache.spark.sql.DataFrame]
     val jobs = jobsDuring {
       frames = Seq(
@@ -143,7 +113,9 @@ class ParquetSchemaSpec extends SparkSuite {
         GenCommit.committedTable(spark, dir, GenCommit.TombsTable),
         ParquetSchema.read(spark, src), // runBatch's source read
         IP.readParquetOrEmpty(spark, led, spark.emptyDataFrame),
-        IP.targetView(spark, tgt))
+        IP.targetView(spark, tgt),
+        genStream.genFrame(tombGen),
+        rowStream.rowFrame(tombGen, committed))
     }
     assert(jobs.isEmpty, s"frame building launched jobs: $jobs")
     // and the frames are the right ones
@@ -151,6 +123,12 @@ class ParquetSchemaSpec extends SparkSuite {
     assert(frames(1).collect().map(_.getAs[Long]("k")).toSeq == Seq(2L))
     assert(frames(2).count() == 40 && frames(3).count() == 25 &&
       frames(4).count() == 25)
+    def changes(df: org.apache.spark.sql.DataFrame) =
+      df.select("k", "_change").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(changes(frames(5)) == Seq((2L, "delete")))
+    assert(changes(frames(6)) == Seq((2L, "delete")) &&
+      frames(6).select("v").head().getDouble(0) == 20.0)
   }
 
   test("an empty insertRows launches no checkpoint job and leaves the " +

@@ -26,6 +26,48 @@ class RatesDimSpec extends SparkSuite {
     assert(c.fetchCount == 2)
   }
 
+  test("same-day resolves reuse one local frame, collected once") {
+    val c = cache(RatesDim.StaticProvider)
+    val d1 = LocalDate.parse("2026-01-01")
+    val first = c.resolve(d1)
+    assert(first.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    var again: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring { again = c.resolve(d1) }
+    assert(again eq first, "a same-day resolve built a new frame")
+    assert(jobs.isEmpty, s"a same-day resolve launched jobs: $jobs")
+    assert(c.resolve(LocalDate.parse("2026-01-02")) ne first)
+    assert(c.fetchCount == 2)
+  }
+
+  test("a conversion against broadcastable(day) launches no job for the " +
+      "rates side") {
+    val store = "file:" + Files.createTempDirectory("graft_rates_")
+    val c = new RatesDim.DailyCachedRates(spark, store, RatesDim.StaticProvider)
+    val day = LocalDate.parse("2026-01-01")
+    val rates = c.broadcastable(day)
+    val root = TempRoots.create("graft_rates_conv_")
+    gen.OrderGen.orders(spark, 40, seed = 19).write.parquet(s"$root/src")
+    val batch = spark.read.parquet(s"$root/src").cache()
+    batch.count()
+    val ts = java.sql.Timestamp.valueOf("2026-01-02 00:00:00")
+    def convertInto(r: org.apache.spark.sql.DataFrame, out: String) =
+      jobsDuring(IP.convertBatch(batch, r, ts).write.parquet(out))
+    def broadcasts(jobs: Seq[String]) =
+      jobs.count(_.contains("broadcast exchange"))
+    val local = convertInto(rates, s"$root/local")
+    assert(broadcasts(local) == 0 && local.size == 1,
+      s"the rates side launched jobs: $local")
+    // the same join over the day's memo files pays its broadcast job
+    val stored = convertInto(org.apache.spark.sql.functions.broadcast(
+      spark.read.parquet(s"$store/day=$day")), s"$root/stored")
+    assert(broadcasts(stored) == 1, stored)
+    def rows(d: String) =
+      spark.read.parquet(d).collect().map(_.toString).sorted.toSeq
+    assert(rows(s"$root/local") == rows(s"$root/stored"))
+    batch.unpersist()
+  }
+
   test("rates are re-based to units-per-EUR (EUR exactly 1.0)") {
     val c = cache(RatesDim.StaticProvider)
     val rates = c.resolve(LocalDate.parse("2026-01-01"))

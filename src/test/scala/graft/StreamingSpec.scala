@@ -353,6 +353,33 @@ class StreamingSpec extends SparkSuite {
     val eur = tv.filter(col("original_currency") === "EUR")
       .filter(col("amount_eur") =!= col("original_amount"))
     assert(eur.count() == 0)
+
+    // a 3-batch backlog: three new files, 75 fresh rows over the cap of
+    // 30. No file is recorded consumed until the batch that drains them
+    val backlog = gen.OrderGen.orders(spark, 75, seed = 8)
+    backlog.repartition(3).write.mode("append").parquet(src)
+    def records() = Option(new java.io.File(s"$led/_consumed").list())
+      .map(_.count(n => !n.startsWith("."))).getOrElse(0)
+    val recorded0 = records()
+    val stamps = Seq("03", "04", "05").map(h => ts(s"2026-01-02 $h:00:00"))
+    val runs = stamps.map { t =>
+      val r = IP.runBatch(spark, src, tgt, led, ratesDf, t, maxBatch = 30)
+      (r, records())
+    }
+    assert(runs == Seq((IP.BatchResult(30, 30), recorded0),
+      (IP.BatchResult(30, 30), recorded0),
+      (IP.BatchResult(15, 15), recorded0 + 1)))
+    assert(IP.runBatch(spark, src, tgt, led, ratesDf,
+      ts("2026-01-02 06:00:00"), maxBatch = 30) == IP.BatchResult(0, 0))
+    // exactly once, in order_id order: batch k took the k-th 30 ids
+    val ids = backlog.select("order_id").collect().map(_.getString(0)).sorted
+    val raw = spark.read.parquet(tgt)
+    stamps.zipWithIndex.foreach { case (t, k) =>
+      val got = raw.filter(col("processed_at") === lit(t))
+        .select("order_id").collect().map(_.getString(0)).sorted.toSeq
+      assert(got == ids.slice(30 * k, 30 * k + 30).toSeq, s"batch $k")
+    }
+    assert(raw.count() == 125 && IP.targetView(spark, tgt).count() == 125)
   }
 
   test("x04 batch: replayed append is invisible through the PK view") {
