@@ -7,7 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.util.sketch.BloomFilter
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicLong
 import scala.util.{Failure, Success, Try}
 
 /** x04_stream_incremental: the reference pipeline's core semantics —
@@ -63,13 +65,60 @@ import scala.util.{Failure, Success, Try}
   * schemas from footer reads on the driver
   * ([[graft.sources.ParquetSchema]]), not the inference job a
   * schema-less `spark.read.parquet` launches. An idle tick — no new
-  * source file — lists two directories and launches no job. What still
-  * grows with history is the ledger side of the anti-join: the whole
-  * ledger is broadcast on every batch.
+  * source file — lists two directories and launches no job.
+  *
+  * Ledger Blooms: every ledger data file has a Bloom sidecar in the
+  * ledger's hidden `_blooms/` directory (`<data file name>.bloom`) over
+  * `xxhash64(order_id)` — the hash `graft_bloom_agg` and
+  * `graft_might_contain` use — sized from the file's row count at a
+  * per-file false-positive rate of 1e-8 (≈38 bits per id). A sidecar
+  * holds its data file's length, then the filter in
+  * `org.apache.spark.util.sketch.BloomFilter`'s own format; it is written
+  * by temp file + rename before its data file is published, so every
+  * ledger file's Bloom admits every id in that file. A batch that can
+  * take every fresh row loads the ledger's Blooms on the driver, ships
+  * them as one broadcast, and checks each fresh id against them in the
+  * job that fills its cache and counts it. No admitted id: the pick is
+  * every fresh row, and the ledger itself is not read. An admitted id,
+  * or a ledger file whose Bloom is missing, unreadable or records
+  * another length: the batch runs the exact anti-join against the whole
+  * ledger, counted per reason ([[Fallback]]) and logged. A ledger
+  * written before the Blooms existed has none, so it takes the exact
+  * path until [[compactLedger]] — which writes a Bloom for every file it
+  * writes — next rewrites it. The probe's scale: ≈38 bits per ledgered id
+  * read on the driver per batch, against 32-byte ids scanned and hashed
+  * into a broadcast relation by the exact anti-join.
   */
 object IncrementalPipeline {
 
   final case class BatchResult(picked: Long, appended: Long)
+
+  private val log =
+    org.slf4j.LoggerFactory.getLogger("graft.streaming.IncrementalPipeline")
+
+  /** Why a batch that could take every fresh row ran the exact anti-join
+    * against the whole ledger instead of the Bloom-checked pick. Each
+    * such batch is counted here and logged at WARN.
+    */
+  sealed abstract class Fallback(val reason: String) {
+    private[IncrementalPipeline] val count = new AtomicLong
+    /** Process-wide count of batches that fell back for this reason. */
+    def batches: Long = count.get
+  }
+  /** A ledger data file's Bloom is missing, unreadable, or records
+    * another length than the file's.
+    */
+  object MissingBloom extends Fallback("a ledger file has no valid Bloom")
+  /** A fresh id is admitted by a ledger Bloom (ledgered, or a false
+    * positive).
+    */
+  object FlaggedId extends Fallback("a ledger Bloom admits a fresh id")
+
+  private def fellBack(f: Fallback, detail: String): Unit = {
+    f.count.incrementAndGet()
+    log.warn(s"ledger probe: ${f.reason} ($detail); running the exact " +
+      "anti-join against the whole ledger")
+  }
 
   /** The pickup stage — "unprocessed rows, deterministic order, capped"
     * (`dags/order_currency_conversion_dag.py:87-95`): one LEFT ANTI
@@ -170,36 +219,125 @@ object IncrementalPipeline {
     val files = unread.map(_._2)
 
     val source = readFiles(spark, sourceDir, files)
-    val ledger = readParquetOrEmpty(spark, ledgerDir,
-      source.select(col("order_id"), lit(batchTs).as("processed_at")))
-    // the footers' row count bounds the fresh rows; summing stops at the cap
-    val underCap = files.iterator.map(ParquetSchema.rowCount(spark, _))
-      .scanLeft(0L)(_ + _).forall(_ <= maxBatch)
+    // the footers' row counts bound the fresh rows; summing stops past the
+    // cap
+    val footerRows = files.iterator.map(ParquetSchema.rowCount(spark, _))
+      .scanLeft(0L)(_ + _).takeWhile(_ <= maxBatch).toSeq
+    val underCap = footerRows.size > files.size
     // R2+R3: unprocessed pickup, capped — deterministic order (D1) instead
     // of the reference's bare LIMIT; the q46-declared primitive when the
     // cap can bind, every fresh row (no top-K) when it cannot
-    val picked = (
-      if (underCap) source.join(ledger.select("order_id"), Seq("order_id"),
-        "left_anti")
-      else pickup(source, ledger, "order_id", maxBatch)).cache()
+    val pick =
+      if (underCap) pickFresh(spark, source, ledgerDir, Some(footerRows.last))
+      else counted(pickup(source, ledgerIds(spark, ledgerDir, source),
+        "order_id", maxBatch).cache(), Some(maxBatch.toLong))
     try {
-      // one job fills the cache and counts it; Dataset.count would add
-      // an aggregate's shuffle map and reduce jobs
-      val nPicked = picked.queryExecution.toRdd.count()
-      if (nPicked > 0)
+      if (pick.n > 0)
         append(spark,
-          oneOrderedFile(convert(picked, rates, batchTs)),
-          oneOrderedFile(picked.select(col("order_id"),
+          oneOrderedFile(convert(pick.rows, rates, batchTs)),
+          oneOrderedFile(pick.rows.select(col("order_id"),
             lit(batchTs).as("processed_at"))),
-          targetDir, ledgerDir)
+          targetDir, ledgerDir, pick.bloom)
       // R6: an empty batch appends nothing; its files are still consumed
-      if (underCap || nPicked < maxBatch)
+      if (underCap || pick.n < maxBatch)
         writeConsumed(fs, new Path(led, ConsumedDir), unread.map(_._1),
           GenCommit.newToken())
-      BatchResult(nPicked, nPicked)
-    } finally picked.unpersist() // a scheduler polling a drained source
+      BatchResult(pick.n, pick.n)
+    } finally pick.rows.unpersist() // a scheduler polling a drained source
     // must not leak one cache entry per tick
   }
+
+  /** A batch's pick: the cached rows, their count, and a Bloom of their
+    * ids for the ledger file they become.
+    */
+  private final case class Pick(rows: DataFrame, n: Long, bloom: BloomFilter)
+
+  /** The pick of a batch that takes every fresh row: `fresh` minus the
+    * ledgered ids, cached. When every ledger file has a valid Bloom, one
+    * job fills the cache of `fresh`, counts it, flags the rows a ledger
+    * Bloom admits, and builds the batch's Bloom; with no flagged row that
+    * is the pick, and the ledger is not read. Otherwise the exact
+    * anti-join against the whole ledger is the pick ([[Fallback]]).
+    * `bound`, when known, is at least the number of fresh rows and sizes
+    * the batch's Bloom inside that one job; without it the Bloom takes a
+    * second job over the cached pick.
+    */
+  private def pickFresh(spark: SparkSession, fresh: DataFrame,
+      ledgerDir: String, bound: Option[Long]): Pick = {
+    def exact(from: DataFrame): Pick =
+      counted(from.join(ledgerIds(spark, ledgerDir, from), Seq("order_id"),
+        "left_anti").cache(), bound)
+    val (fs, led) = fsFor(spark, ledgerDir)
+    loadBlooms(spark, fs, led) match {
+      case Left(missing) =>
+        fellBack(MissingBloom, s"${missing.size} file(s), first " +
+          missing.head)
+        exact(fresh)
+      case Right(blooms) =>
+        val rows = fresh.cache()
+        unpersistOnFailure(rows) {
+          val seen =
+            if (blooms.isEmpty) None
+            else Some(spark.sparkContext.broadcast(blooms))
+          val s = try scan(rows, seen, bound)
+            finally seen.foreach(_.destroy())
+          if (s.flagged == 0) pickOf(rows, s)
+          else {
+            fellBack(FlaggedId, s"${s.flagged} of ${s.n} fresh ids")
+            try exact(rows) finally rows.unpersist()
+          }
+        }
+    }
+  }
+
+  /** `rows` (cached) as a pick: counted, with its Bloom, in one job when
+    * `bound` sizes the Bloom up front.
+    */
+  private def counted(rows: DataFrame, bound: Option[Long]): Pick =
+    unpersistOnFailure(rows)(pickOf(rows, scan(rows, None, bound)))
+
+  private def pickOf(rows: DataFrame, s: Scan): Pick =
+    Pick(rows, s.n, s.bloom.getOrElse(
+      if (s.n == 0) newBloom(1) else scan(rows, None, Some(s.n)).bloom.get))
+
+  private def unpersistOnFailure[T](df: DataFrame)(body: => T): T =
+    try body catch { case t: Throwable => df.unpersist(); throw t }
+
+  /** The ledger's ids, read as parquet; empty when it holds no file. */
+  private def ledgerIds(spark: SparkSession, ledgerDir: String,
+      like: DataFrame): DataFrame =
+    readParquetOrEmpty(spark, ledgerDir, like.select("order_id"))
+      .select("order_id")
+
+  /** One pass over `rows`: how many, how many a Bloom in `seen` admits,
+    * and — when `bound` is given — a Bloom of their ids sized for `bound`
+    * ids, built per partition and merged on the driver.
+    */
+  private final case class Scan(n: Long, flagged: Long,
+      bloom: Option[BloomFilter])
+
+  private def scan(rows: DataFrame,
+      seen: Option[org.apache.spark.broadcast.Broadcast[Array[BloomFilter]]],
+      bound: Option[Long]): Scan =
+    // one job; Dataset.count would add an aggregate's shuffle map and
+    // reduce jobs
+    rows.select(xxhash64(col("order_id"))).queryExecution.toRdd
+      .mapPartitions { it =>
+        val ledger = seen.fold(Array.empty[BloomFilter])(_.value)
+        val bloom = bound.map(newBloom)
+        var n, flagged = 0L
+        it.foreach { r =>
+          val h = r.getLong(0)
+          n += 1
+          if (ledger.exists(_.mightContainLong(h))) flagged += 1
+          bloom.foreach(_.putLong(h))
+        }
+        Iterator(Scan(n, flagged, bloom))
+      }
+      .reduce { (a, b) =>
+        Scan(a.n + b.n, a.flagged + b.flagged,
+          a.bloom.map(_.mergeInPlace(b.bloom.get)))
+      }
 
   /** One output file per batch, rows in order_id order. The sort sits
     * above the conversion join, where the optimizer keeps it.
@@ -230,12 +368,15 @@ object IncrementalPipeline {
     * reference's (target, then ledger; `:156-157`) and the crash window
     * stays the one [[targetView]] absorbs. A failure of either write
     * fails the call after both have finished; whatever was staged is
-    * left for [[recoverLedger]] to sweep. The second thread is started
-    * from this one and inherits its Spark local properties, so its jobs
-    * belong to the caller's job group and SQL execution.
+    * left for [[recoverLedger]] to sweep. Each staged file's Bloom sidecar
+    * (`bloom`, which admits every id of the batch) is published before the
+    * file itself. The second thread is started from this one and inherits
+    * its Spark local properties, so its jobs belong to the caller's job
+    * group and SQL execution.
     */
   private def append(spark: SparkSession, target: DataFrame,
-      ledgerRows: DataFrame, targetDir: String, ledgerDir: String): Unit = {
+      ledgerRows: DataFrame, targetDir: String, ledgerDir: String,
+      bloom: BloomFilter): Unit = {
     val (fs, led) = fsFor(spark, ledgerDir)
     val stage = new Path(led, s"$StagingDir/${GenCommit.newToken()}")
     var staged: Try[Unit] =
@@ -249,10 +390,11 @@ object IncrementalPipeline {
     stager.join()
     wrote.get
     staged.get
-    fs.listStatus(stage).map(_.getPath).filter(p => visible(p.getName))
-      .foreach { p =>
-        require(fs.rename(p, new Path(led, p.getName)),
-          s"could not publish staged ledger file $p")
+    fs.listStatus(stage).filter(f => visible(f.getPath.getName))
+      .foreach { f =>
+        writeBloom(fs, led, f, bloom)
+        require(fs.rename(f.getPath, new Path(led, f.getPath.getName)),
+          s"could not publish staged ledger file ${f.getPath}")
       }
     fs.delete(stage.getParent, true)
   }
@@ -261,11 +403,100 @@ object IncrementalPipeline {
   private def visible(name: String): Boolean =
     !name.startsWith("_") && !name.startsWith(".")
 
-  /** The ledger's hidden side directories: staged appends, and the
-    * record of fully consumed source files.
+  /** The ledger's hidden side directories: staged appends, the record of
+    * fully consumed source files, and the data files' Bloom sidecars.
     */
   private val StagingDir = "_staging"
   private val ConsumedDir = "_consumed"
+  private val BloomDir = "_blooms"
+  private val BloomSuffix = ".bloom"
+
+  /** A ledger Bloom's false-positive rate: ≈38 bits per id. A batch of
+    * 30,000 fresh ids checked against a day's 24 ledger files is falsely
+    * flagged in under 1% of batches.
+    */
+  private val BloomFpp = 1e-8
+
+  private def newBloom(ids: Long): BloomFilter =
+    BloomFilter.create(math.max(1L, ids), BloomFpp)
+
+  private def bloomPath(led: Path, dataFile: String): Path =
+    new Path(new Path(led, BloomDir), dataFile + BloomSuffix)
+
+  /** Publish the Bloom sidecar of ledger data file `dataFile`: its length,
+    * then `bloom` in the sketch's own format.
+    */
+  private[graft] def writeBloom(fs: FileSystem, led: Path,
+      dataFile: FileStatus, bloom: BloomFilter): Unit = {
+    val p = bloomPath(led, dataFile.getPath.getName)
+    publish(fs, p.getParent, p.getName) { out =>
+      val data = new java.io.DataOutputStream(out)
+      data.writeLong(dataFile.getLen)
+      bloom.writeTo(data)
+      data.flush()
+    }
+  }
+
+  /** The Bloom of ledger data file `dataFile`, if its sidecar exists, can
+    * be read whole and records the file's length.
+    */
+  private def readBloom(fs: FileSystem, led: Path,
+      dataFile: FileStatus): Option[BloomFilter] =
+    Try {
+      val in = new java.io.DataInputStream(
+        fs.open(bloomPath(led, dataFile.getPath.getName)))
+      try
+        if (in.readLong() != dataFile.getLen) None
+        else Some(BloomFilter.readFrom(in))
+      finally in.close()
+    }.toOption.flatten
+
+  /** The Blooms of every data file in the ledger at `led`, or the names of
+    * the files without a valid one.
+    */
+  private[graft] def loadBlooms(spark: SparkSession, fs: FileSystem, led: Path)
+      : Either[Seq[String], Array[BloomFilter]] = {
+    val files = ParquetSchema.dataFiles(spark, led.toString)
+    val blooms = files.map(readBloom(fs, led, _))
+    if (blooms.forall(_.isDefined)) Right(blooms.flatten.toArray)
+    else Left(files.zip(blooms).collect { case (f, None) => f.getPath.getName })
+  }
+
+  /** A Bloom for every data file of the ledger copy at `dir`, written
+    * into its `_blooms`: one job over the copy, each file's filter sized
+    * from its footer's row count.
+    */
+  private def writeBlooms(spark: SparkSession, fs: FileSystem,
+      dir: Path): Unit = {
+    val files = ParquetSchema.dataFiles(spark, dir.toString)
+    val sizes = files.map(f =>
+      f.getPath.getName -> ParquetSchema.rowCount(spark, f)).toMap
+    val blooms = ParquetSchema.read(spark, dir.toString)
+      .select(col("_metadata.file_name"), xxhash64(col("order_id")))
+      .queryExecution.toRdd
+      .mapPartitions { it =>
+        val byFile = scala.collection.mutable.Map.empty[String, BloomFilter]
+        var file: org.apache.spark.unsafe.types.UTF8String = null
+        var bloom: BloomFilter = null
+        it.foreach { r =>
+          // a partition reads its files one after another
+          if (file != r.getUTF8String(0)) {
+            file = r.getUTF8String(0).clone()
+            bloom = byFile.getOrElseUpdate(file.toString,
+              newBloom(sizes(file.toString)))
+          }
+          bloom.putLong(r.getLong(1))
+        }
+        Iterator(byFile.toMap)
+      }
+      .fold(Map.empty[String, BloomFilter]) { (a, b) =>
+        a ++ b.map { case (f, x) => f -> a.get(f).fold(x)(_.mergeInPlace(x)) }
+      }
+    files.foreach { f =>
+      val name = f.getPath.getName
+      writeBloom(fs, dir, f, blooms.getOrElse(name, newBloom(sizes(name))))
+    }
+  }
 
   /** One consumed-record line: the file's path relative to the source
     * root (URI-encoded, so free of tabs and newlines), its length and its
@@ -286,18 +517,21 @@ object IncrementalPipeline {
       .flatMap(s => GenCommit.readSmallFile(fs, s.getPath).split("\n"))
       .filter(_.nonEmpty).toSet
 
-  /** Add `lines` to a consumed record as one file named `name`, written
-    * by temp file + rename so a reader never sees half a record.
-    */
+  /** Add `lines` to a consumed record as one file named `name`. */
   private def writeConsumed(fs: FileSystem, dir: Path, lines: Seq[String],
-      name: String): Unit = {
+      name: String): Unit =
+    publish(fs, dir, name)(_.write(lines.map(_ + "\n").mkString
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+
+  /** Write `dir/name` by temp file + rename, so a reader never sees half
+    * a file: a consumed record or a Bloom sidecar.
+    */
+  private def publish(fs: FileSystem, dir: Path, name: String)(
+      write: java.io.OutputStream => Unit): Unit = {
     val tmp = new Path(dir, s".tmp-$name")
     val out = fs.create(tmp, true)
-    try out.write(lines.map(_ + "\n").mkString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    require(fs.rename(tmp, new Path(dir, name)),
-      s"could not publish consumed record $tmp")
+    try write(out) finally out.close()
+    require(fs.rename(tmp, new Path(dir, name)), s"could not publish $tmp")
   }
 
   /** Rewrite the append-only ledger as range-sorted multi-file output. The
@@ -318,7 +552,9 @@ object IncrementalPipeline {
     * would silently re-deliver the entire source; duplicates would still
     * collapse in [[targetView]], but the recompute is the failure to avoid.
     * The consumed record is merged into the compacted copy before the
-    * swap, so whichever ledger the swap leaves live carries it.
+    * swap, and every compacted file gets its Bloom there, so whichever
+    * ledger the swap leaves live carries the record and a Bloom for every
+    * file.
     */
   def compactLedger(spark: SparkSession, ledgerDir: String): Unit = {
     recoverLedger(spark, ledgerDir)
@@ -333,7 +569,7 @@ object IncrementalPipeline {
     // ledger should not be scanned twice per compaction. Target ~128 MB of
     // parquet per output file; ≥2 files so compaction never regresses to
     // the single-task/single-file shape. The schema, likewise, is one
-    // driver-side footer read: the rewrite is the compaction's only job
+    // driver-side footer read, not a job
     val bytes = fs.getContentSummary(dir).getLength
     val nFiles = math.max(2, math.min(spark.sparkContext.defaultParallelism,
       (bytes / (128L << 20)).toInt + 1))
@@ -344,6 +580,7 @@ object IncrementalPipeline {
     if (consumed.nonEmpty)
       writeConsumed(fs, new Path(tmp, ConsumedDir), consumed.toSeq.sorted,
         GenCommit.newToken())
+    writeBlooms(spark, fs, tmp)
     require(fs.rename(dir, bak), s"could not move $ledgerDir aside")
     require(fs.rename(tmp, dir), s"could not activate compacted ledger; " +
       s"backup preserved at $bak")
@@ -363,9 +600,10 @@ object IncrementalPipeline {
   /** Repair an interrupted [[compactLedger]] swap: if the live ledger is
     * missing but its backup exists, the backup IS the ledger — restore it.
     * Then sweep what a batch killed mid-commit leaves: its staged ledger
-    * append (never published, so its ids are simply picked again) and a
-    * consumed-record temp file. Single-writer contract: only safe while
-    * no batch or compaction of this ledger is running.
+    * append (never published, so its ids are simply picked again), a
+    * consumed-record or Bloom temp file, and a Bloom published before its
+    * data file was. Single-writer contract: only safe while no batch or
+    * compaction of this ledger is running.
     */
   def recoverLedger(spark: SparkSession, ledgerDir: String): Unit = {
     val (fs, dir) = fsFor(spark, ledgerDir)
@@ -379,6 +617,15 @@ object IncrementalPipeline {
     listOrEmpty(fs, new Path(dir, ConsumedDir))
       .map(_.getPath).filter(_.getName.startsWith(".tmp-"))
       .foreach(fs.delete(_, false))
+    val blooms = listOrEmpty(fs, new Path(dir, BloomDir)).map(_.getPath)
+    if (blooms.nonEmpty) {
+      val files = listOrEmpty(fs, dir).map(_.getPath.getName).toSet
+      blooms.filter { p =>
+        val n = p.getName
+        n.startsWith(".tmp-") ||
+          n.endsWith(BloomSuffix) && !files(n.stripSuffix(BloomSuffix))
+      }.foreach(fs.delete(_, false))
+    }
   }
 
   /** The target with PK semantics enforced on read: keep-first per
@@ -395,8 +642,10 @@ object IncrementalPipeline {
   }
 
   /** Streaming form: micro-batches through foreachBatch with the same
-    * idempotent, staged append as [[runBatch]] (no consumed record: the
-    * stream's source offsets live in its checkpoint). The checkpoint
+    * Bloom-checked pick and idempotent, staged append as [[runBatch]] (no
+    * consumed record: the stream's source offsets live in its
+    * checkpoint; no row bound, so a batch's Bloom takes a second job over
+    * its cached pick). The checkpoint
     * replays an unacknowledged batch on restart (at-least-once). Replay semantics, stated precisely: if the
     * crash hit BEFORE the target append committed, the ledger anti-join
     * makes the replay a clean re-run; if it hit BETWEEN the target append
@@ -426,17 +675,13 @@ object IncrementalPipeline {
         val spark = batch.sparkSession
         val ts = batchTs
         recoverLedger(spark, ledgerDir) // a killed micro-batch's staging
-        val ledger = readParquetOrEmpty(spark, ledgerDir,
-          batch.select(col("order_id"), lit(ts).as("processed_at")))
-        val fresh = batch
-          .join(ledger.select("order_id"), Seq("order_id"), "left_anti")
-          .cache()
+        val pick = pickFresh(spark, batch, ledgerDir, None)
         try {
-          if (!fresh.isEmpty)
-            append(spark, convert(fresh, rates, ts),
-              fresh.select(col("order_id"), lit(ts).as("processed_at")),
-              targetDir, ledgerDir)
-        } finally fresh.unpersist() // incl. write failure — the checkpoint
+          if (pick.n > 0)
+            append(spark, convert(pick.rows, rates, ts),
+              pick.rows.select(col("order_id"), lit(ts).as("processed_at")),
+              targetDir, ledgerDir, pick.bloom)
+        } finally pick.rows.unpersist() // incl. write failure — the checkpoint
         // replays the batch and would otherwise leak one cache entry per retry
         ()
       }
