@@ -51,6 +51,19 @@ object Ckpt {
     */
   def unresolved: Long = unresolvedCount.get
 
+  private val sigMissCount = new java.util.concurrent.atomic.AtomicLong
+
+  /** Record one CC-loop round whose fused convergence signature (the
+    * `Observation` riding its checkpoint job) was not delivered within
+    * the loop's bounded wait; the round then ran the exact probe.
+    */
+  private[graft] def signatureMissed(): Unit = sigMissCount.incrementAndGet()
+
+  /** Process-wide count of CC-loop rounds whose signature missed its
+    * wait ([[signatureMissed]]) — each one paid an extra probe job.
+    */
+  def signatureMisses: Long = sigMissCount.get
+
   /** Unpersist exactly `df`'s own checkpointed blocks (async). */
   def free(df: DataFrame): Unit =
     ownedRdd(df, "Ckpt.free").foreach(_.unpersist(blocking = false))

@@ -1560,16 +1560,18 @@ object Text {
         bit_xor(h).as("__sig_xor"), count(lit(1)).as("__sig_n")), obs)
     }
     /** The delivered signature, or None if the metrics listener has not
-      * fired within the bounded wait (the checkpoint action has already
-      * completed when this is called, so delivery is normally
-      * immediate; None merely falls back to the exact probe).
+      * fired within 100 ms (the checkpoint action has already completed
+      * when this is called, so delivery is normally immediate; None
+      * merely falls back to the exact probe, and is counted in
+      * [[graft.Ckpt.signatureMisses]]).
       */
-    def get(obs: org.apache.spark.sql.Observation): Option[IndexedSeq[Any]] =
-      scala.util.Try(scala.concurrent.Await.result(obs.future,
-          scala.concurrent.duration.Duration(1, "s")))
-        .toOption
-        .map(r => IndexedSeq(r.getAs[Any]("__sig_sum"),
-          r.getAs[Any]("__sig_xor"), r.getAs[Any]("__sig_n")))
+    def get(obs: org.apache.spark.sql.Observation): Option[IndexedSeq[Any]] = {
+      val r = scala.util.Try(scala.concurrent.Await.result(obs.future,
+          scala.concurrent.duration.Duration(100, "ms"))).toOption
+      if (r.isEmpty) graft.Ckpt.signatureMissed()
+      r.map(r => IndexedSeq(r.getAs[Any]("__sig_sum"),
+        r.getAs[Any]("__sig_xor"), r.getAs[Any]("__sig_n")))
+    }
     /** Whether two signed iterates might be equal sets — false PROVES
       * they differ; true (including unknown) defers to the exact probe.
       */

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.DriverParquet
 
 /** Atomic multi-table generation commits for materialized indexes — the
   * fix for the half-applied-append window a two-table index otherwise
@@ -91,13 +92,49 @@ object GenCommit {
     java.util.UUID.randomUUID.toString.replace("-", "").take(12)
 
   /** The committed generation ids (marker file names under commits/). */
-  def committed(spark: SparkSession, indexDir: String): Seq[Long] = {
-    val f = fsOf(spark, indexDir)
-    val dir = new org.apache.hadoop.fs.Path(s"$indexDir/commits")
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted
-  }
+  def committed(spark: SparkSession, indexDir: String): Seq[Long] =
+    committedMarks(spark, indexDir).map(_._1)
+
+  /** The committed generations with their markers' modification times,
+    * by id: the commit set's identity — a table replaced at the same
+    * path shows the same ids under newer markers.
+    */
+  def committedMarks(spark: SparkSession,
+      indexDir: String): Seq[(Long, Long)] =
+    commitsListing(spark, indexDir)
+      .map(st => st.getPath.getName -> st.getModificationTime)
+      .collect { case (n, t) if n.nonEmpty && n.forall(_.isDigit) =>
+        n.toLong -> t }
+      .sortBy(_._1)
+
+  /** The entries of `commits/`: markers and claims, one listing. */
+  private[sources] def commitsListing(spark: SparkSession,
+      indexDir: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    listOrEmpty(fsOf(spark, indexDir),
+      new org.apache.hadoop.fs.Path(s"$indexDir/commits"))
+
+  /** The committed ids in a [[commitsListing]]. */
+  private[sources] def committedIn(
+      commits: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Long] =
+    commits.map(_.getPath.getName)
+      .collect { case n if n.nonEmpty && n.forall(_.isDigit) => n.toLong }
+      .sorted
+
+  /** The claimed ids in a [[commitsListing]]. */
+  private[sources] def claimedIn(
+      commits: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Long] =
+    commits.map(_.getPath.getName)
+      .collect { case n if n.startsWith(Claim) &&
+        n.drop(Claim.length).nonEmpty &&
+        n.drop(Claim.length).forall(_.isDigit) => n.drop(Claim.length).toLong }
+
+  /** `dir`'s children, or none when it does not exist — one listing, no
+    * separate existence check.
+    */
+  def listOrEmpty(f: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    try f.listStatus(dir).toSeq
+    catch { case _: java.io.FileNotFoundException => Nil }
 
   /** The committed set AS OF generation `asOf` — the reader-side pin
     * that makes index reads reproducible (VERDICT r13 #2): a probe
@@ -113,8 +150,12 @@ object GenCommit {
     * exactly the data it did before the compaction.
     */
   def committedAsOf(spark: SparkSession, indexDir: String,
-      asOf: Option[Long]): Seq[Long] = {
-    val gens = committed(spark, indexDir)
+      asOf: Option[Long]): Seq[Long] =
+    pinned(indexDir, committed(spark, indexDir), asOf)
+
+  /** [[committedAsOf]] over a commit listing the caller already holds. */
+  private[sources] def pinned(indexDir: String, gens: Seq[Long],
+      asOf: Option[Long]): Seq[Long] =
     asOf match {
       case None => gens
       case Some(k) =>
@@ -124,7 +165,6 @@ object GenCommit {
             "history; only still-present generations can be pinned")
         gens.filter(_ <= k)
     }
-  }
 
   /** A table's COMMITTED rows: generations are the table's first
     * partition level (`<table>/gen=<k>/…`), filtered to the commit-
@@ -175,54 +215,185 @@ object GenCommit {
     * generation past the tombstone's and survive, while every copy from
     * before the delete stays masked). `asOf` pins both sides to one
     * snapshot, so an as-of read from before a delete still sees the doc.
+    * Ids join by plain equality: a NULL id is never masked.
     *
-    * Cost shape: nothing at all while the index has no tombs table (the
-    * common case — the filter is only planned when deletes exist); with
-    * deletes, one delete-proportional aggregate plus a join the optimizer
-    * broadcasts at real-world delete rates. Deletes accumulate until the
-    * index's compaction folds them into the data tables and drops the
-    * tombs table.
+    * Cost shape: nothing at all while the index has no committed
+    * tombstone (no join is planned); with deletes, the tombstones folded
+    * per id by [[foldTombs]] — on the driver with no Spark job up to the
+    * broadcast threshold — and joined as a broadcast. Deletes accumulate
+    * until the index's compaction folds them into the data tables and
+    * drops the tombs table.
     */
   def maskTombstones(spark: SparkSession, indexDir: String,
       data: org.apache.spark.sql.DataFrame, idCol: String,
       asOf: Option[Long] = None): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    committedTableIfExists(spark, indexDir, TombsTable, asOf) match {
+    // the commit set is resolved only once a tombs table exists — an
+    // index that never saw a delete pays one listing
+    lazy val gens = {
+      val g = committedAsOf(spark, indexDir, asOf)
+      require(g.nonEmpty,
+        s"no committed generations at $indexDir — build the index first")
+      g
+    }
+    committedTombFiles(spark, indexDir, gens)
+      .flatMap(foldTombs(spark, indexDir, gens, _, Seq("id"))) match {
       case None => data
-      case Some(tombs) =>
-        val tmax = tombs.groupBy(col("id").as(idCol))
-          .agg(max(col("gen")).as("__tomb_gen"))
-        data.join(tmax, Seq(idCol), "left")
-          .filter(col("__tomb_gen").isNull || col("gen") > col("__tomb_gen"))
-          .drop("__tomb_gen")
+      case Some(tmax) =>
+        data.join(tmax.withColumnRenamed("id", idCol), Seq(idCol), "left")
+          .filter(col(TombGen).isNull || col("gen") > col(TombGen))
+          .drop(TombGen)
     }
   }
+
+  /** The column [[foldTombs]] carries each key's newest tombstone
+    * generation in.
+    */
+  val TombGen = "__tomb_gen"
+
+  /** The tombstone files of the generations in `gens`, as (generation,
+    * file) in path order; None when the index has no tombs table at all.
+    * `gens` is evaluated only when the table exists. One listing of the
+    * table root plus one per committed tombstone generation.
+    */
+  def committedTombFiles(spark: SparkSession, indexDir: String,
+      gens: => Seq[Long])
+      : Option[Seq[(Long, org.apache.hadoop.fs.FileStatus)]] = {
+    val root = new org.apache.hadoop.fs.Path(s"$indexDir/$TombsTable")
+    val dirs =
+      try fsOf(spark, indexDir).listStatus(root).toSeq
+      catch { case _: java.io.FileNotFoundException => return None }
+    val keep = gens.toSet
+    Some(dirs.flatMap { st =>
+      val n = st.getPath.getName
+      val g = if (st.isDirectory && n.startsWith("gen=") && n.length > 4 &&
+          n.drop(4).forall(_.isDigit)) Some(n.drop(4).toLong) else None
+      g.filter(keep).toSeq.flatMap(k =>
+        ParquetSchema.dataFiles(spark, st.getPath.toString).map(k -> _))
+    }.sortBy(_._2.getPath.toString))
+  }
+
+  /** Committed tombstones folded to one row per key: the `keys` columns
+    * and [[TombGen]], the newest tombstone generation of that key; None
+    * when `files` is empty.
+    *
+    * When the files total at most `spark.sql.autoBroadcastJoinThreshold`
+    * bytes — the size at which the optimizer broadcasts them anyway, and
+    * a broadcast collects its rows on the driver — they are read on the
+    * driver with Spark's own parquet reader ([[DriverParquet]]), folded
+    * there, and returned as a local relation with a broadcast hint:
+    * [[org.apache.spark.sql.execution.DriverLocalBroadcast]] then builds
+    * the broadcast with no job. Keys fold by their binary row form, so
+    * floating-point and nested key columns (whose join equality is not
+    * binary) take the planned path too. Otherwise — over the threshold,
+    * the threshold disabled (-1), or a footer the driver cannot use — the
+    * fold is the planned aggregate over the committed tombs table, as
+    * before; each such mask is counted in [[TombFallback]] and logged at
+    * WARN.
+    */
+  def foldTombs(spark: SparkSession, indexDir: String, gens: Seq[Long],
+      files: Seq[(Long, org.apache.hadoop.fs.FileStatus)], keys: Seq[String])
+      : Option[org.apache.spark.sql.DataFrame] = {
+    import org.apache.spark.sql.functions.{col, max}
+    if (files.isEmpty) return None
+    val bytes = files.map(_._2.getLen).sum
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val local: Either[String, org.apache.spark.sql.DataFrame] =
+      if (limit < 0) Left("the broadcast threshold is disabled")
+      else if (bytes > limit)
+        Left(s"$bytes tombstone bytes exceed the $limit-byte threshold")
+      else DriverParquet.reader(spark, files.head._2, keys)
+        .toRight("the tombstone footer cannot be read on the driver")
+        .flatMap { case (schema, read) =>
+          if (!schema.fields.forall(f => binaryEq(f.dataType)))
+            Left(s"a key column is not binary-comparable ($schema)")
+          else Right(foldOnDriver(spark, schema, files, read))
+        }
+    Some(local.fold({ why =>
+      TombFallback.count.incrementAndGet()
+      logger.warn(s"tombstone mask at $indexDir: $why; folding the " +
+        "tombstones with a planned aggregate")
+      ParquetSchema.read(spark, s"$indexDir/$TombsTable")
+        .filter(col("gen").isin(gens: _*))
+        .groupBy(keys.map(col): _*).agg(max(col("gen")).as(TombGen))
+    }, identity))
+  }
+
+  private def binaryEq(dt: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case BooleanType | ByteType | ShortType | IntegerType | LongType |
+          DateType | TimestampType | TimestampNTZType | BinaryType => true
+      case _: DecimalType => true
+      case s: StringType => s == StringType // the binary collation only
+      case _ => false
+    }
+  }
+
+  /** Key → newest generation over every row of `files`, as a broadcast-
+    * hinted local relation.
+    */
+  private def foldOnDriver(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      files: Seq[(Long, org.apache.hadoop.fs.FileStatus)],
+      read: org.apache.hadoop.fs.FileStatus =>
+        Iterator[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    val key = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      .create(schema)
+    val newest = scala.collection.mutable.HashMap.empty[UnsafeRow, Long]
+    files.foreach { case (g, file) =>
+      read(file).foreach { r =>
+        val k = key(r)
+        if (newest.get(k).forall(_ < g)) newest(k.copy()) = g
+      }
+    }
+    val out = schema.add(TombGen,
+      org.apache.spark.sql.types.LongType, nullable = false)
+    val rows = newest.iterator.map { case (k, g) =>
+      org.apache.spark.sql.catalyst.InternalRow.fromSeq(
+        k.toSeq(schema) :+ g): org.apache.spark.sql.catalyst.InternalRow
+    }.toIndexedSeq
+    org.apache.spark.sql.functions.broadcast(
+      DriverParquet.localFrame(spark, out, rows))
+  }
+
+  /** Tombstone masks folded by the planned aggregate instead of on the
+    * driver ([[foldTombs]]); each one is also logged at WARN.
+    */
+  object TombFallback {
+    private[sources] val count = new java.util.concurrent.atomic.AtomicLong
+    /** Process-wide count of masks that took the planned fold. */
+    def masks: Long = count.get
+  }
+
+  private val logger =
+    org.slf4j.LoggerFactory.getLogger("graft.sources.GenCommit")
 
   /** The next free generation id: past every committed id AND every
     * existing gen dir (a crashed publish may have renamed a table in
     * without committing — its id is burned, never reused).
     */
   def nextGen(spark: SparkSession, indexDir: String,
-      tables: Seq[String]): Long = {
+      tables: Seq[String]): Long =
+    nextGenIn(spark, indexDir, tables, commitsListing(spark, indexDir))
+
+  /** [[nextGen]] over a [[commitsListing]] the caller already holds. */
+  private[sources] def nextGenIn(spark: SparkSession, indexDir: String,
+      tables: Seq[String],
+      commits: Seq[org.apache.hadoop.fs.FileStatus]): Long = {
     val f = fsOf(spark, indexDir)
     val fromDirs = tables.flatMap { t =>
-      val dir = new org.apache.hadoop.fs.Path(s"$indexDir/$t")
-      if (!f.exists(dir)) Seq.empty
-      else f.listStatus(dir).toSeq.map(_.getPath.getName)
+      listOrEmpty(f, new org.apache.hadoop.fs.Path(s"$indexDir/$t"))
+        .map(_.getPath.getName)
         .collect { case n if n.startsWith("gen=") &&
           n.drop(4).forall(_.isDigit) && n.length > 4 => n.drop(4).toLong }
     }
     // claims count too: a writer that died between claiming and its
     // first rename left no gen dir, but its id is burned all the same
-    val commitsDir = new org.apache.hadoop.fs.Path(s"$indexDir/commits")
-    val fromClaims =
-      if (!f.exists(commitsDir)) Seq.empty
-      else f.listStatus(commitsDir).toSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith(Claim) &&
-          n.drop(Claim.length).nonEmpty &&
-          n.drop(Claim.length).forall(_.isDigit) =>
-            n.drop(Claim.length).toLong }
-    ((committed(spark, indexDir) ++ fromDirs ++ fromClaims) :+ -1L).max + 1
+    ((committedIn(commits) ++ fromDirs ++ claimedIn(commits)) :+ -1L)
+      .max + 1
   }
 
   /** Atomically CLAIM the next free generation id — the auto-retry half
@@ -328,16 +499,24 @@ object GenCommit {
     * files only (read into one driver-side buffer).
     */
   def readSmallFile(f: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    if (!f.exists(p)) return ""
-    val in = f.open(p)
+      p: org.apache.hadoop.fs.Path): String =
+    readSmallFileOpt(f, p).getOrElse("")
+
+  /** [[readSmallFile]], None if the file is absent — one `open`, no
+    * separate existence check.
+    */
+  def readSmallFileOpt(f: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Option[String] = {
+    val in =
+      try f.open(p)
+      catch { case _: java.io.FileNotFoundException => return None }
     try {
       val bytes = new java.io.ByteArrayOutputStream()
       val buf = new Array[Byte](8192)
       var n = in.read(buf)
       while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      new String(bytes.toByteArray,
-        java.nio.charset.StandardCharsets.UTF_8)
+      Some(new String(bytes.toByteArray,
+        java.nio.charset.StandardCharsets.UTF_8))
     } finally in.close()
   }
 
@@ -568,15 +747,8 @@ object GenCommit {
     * not) — the recovery paths' worklist ([[recoverClaims]] here,
     * [[graft.sources.GenTable.recover]] for the single-writer table).
     */
-  def claimedGens(spark: SparkSession, indexDir: String): Seq[Long] = {
-    val f = fsOf(spark, indexDir)
-    val commitsDir = new org.apache.hadoop.fs.Path(s"$indexDir/commits")
-    if (!f.exists(commitsDir)) Seq.empty
-    else f.listStatus(commitsDir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith(Claim) &&
-        n.drop(Claim.length).nonEmpty &&
-        n.drop(Claim.length).forall(_.isDigit) => n.drop(Claim.length).toLong }
-  }
+  def claimedGens(spark: SparkSession, indexDir: String): Seq[Long] =
+    claimedIn(commitsListing(spark, indexDir))
 
   /** Release claims whose generation never BEGAN publishing — no gen dir
     * exists for the id in any table (a writer that died between claiming

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.{expressions => ce}
 import org.apache.spark.sql.execution.datasources.{
   FileIndex, HadoopFsRelation, PartitionDirectory}
@@ -26,9 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * perfect executor for that — the native file-source scan (vectorized
   * parquet, whole-stage codegen, filter pushdown into footers) — it
   * only needs to be told WHICH files. So the connector is a custom
-  * [[FileIndex]] ([[GenFileIndex]]: generation resolution + manifest
-  * claims + filestats min/max skipping, all driver-side metadata)
-  * handed to Spark's own [[HadoopFsRelation]]. A DataSource V2
+  * [[FileIndex]] ([[GenFileIndex]]: the winning files of one
+  * [[GenTable.snapshot]] + filestats min/max and bloom skipping, all
+  * driver-side metadata) handed to Spark's own [[HadoopFsRelation]] —
+  * the same relation [[GenTable.read]] scans. A DataSource V2
   * `TableProvider` would instead force a hand-rolled
   * `PartitionReaderFactory` — reimplementing the vectorized parquet
   * reader or dropping to row-at-a-time — which is why Delta Lake's own
@@ -43,7 +43,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * ROW TOMBSTONES make the view a join (data anti-masked by
   * later-generation tombstones), which no file listing can express; a
-  * table with live tombstones serves through
+  * table with committed tombstones in its view serves through
   * [[GenTableMaskedRelation]] instead — a `PrunedFilteredScan` that
   * delegates to [[GenTable.read]]'s plan (pushing column pruning and
   * translatable filters into it, so the INNER parquet scan still
@@ -168,11 +168,6 @@ object GenTableSource {
     parameters.getOrElse("partCol",
       GenTable.partColOf(spark, pathOf(parameters)))
 
-  /** Resolve the relation for one read: the native file-scan relation
-    * when the view is a pure file set; the masked delegate when live
-    * row tombstones (or an all-emptied view, which has no pinnable
-    * file) make it more than one.
-    */
   /** Time-travel PATH SUFFIX (Delta's `table@v0` idiom, plus a
     * timestamp form): `dir@v<gen>` pins a generation, `dir@ts<millis>`
     * a wall-clock instant — so pure SQL (`FROM gentable.`dir@v1``)
@@ -190,6 +185,11 @@ object GenTableSource {
     }
   }
 
+  /** Resolve the relation for one read from one [[GenTable.snapshot]]:
+    * the native file-scan relation when the view is a pure file set; the
+    * masked delegate when committed row tombstones (or an all-emptied
+    * view, which has no pinnable file) make it more than one.
+    */
   def relation(spark: SparkSession,
       parameters: Map[String, String]): BaseRelation = {
     val (dir, sufGen, sufTs) = splitTravelSuffix(pathOf(parameters))
@@ -202,93 +202,68 @@ object GenTableSource {
     // TIMESTAMP AS OF (VERDICT r17 #2): a timestamp pin resolves to a
     // generation through the monotonized-stamp rule, then the read is
     // an ordinary as-of read
-    val asOf = parameters.get("asOfTs").map(_.toLong).orElse(sufTs)
-      .map(t => GenTable.genAtTs(spark, dir, t))
-      .orElse(parameters.get("asOfGen").map(_.toLong)).orElse(sufGen)
-    val f = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasTombs = f.exists(new org.apache.hadoop.fs.Path(
-      s"$dir/${GenCommit.TombsTable}"))
-    val resolved = GenTable.claims(spark, dir, asOf)
-    val pinned = GenTable.pinnedSchema(spark, dir, partCol, resolved)
-    if (hasTombs || pinned.isEmpty)
-      new GenTableMaskedRelation(spark, dir, partCol, asOf)
-    else
-      HadoopFsRelation(
-        new GenFileIndex(spark, dir, partCol, resolved, pinned.get),
-        partitionSchema = StructType(Seq(pinned.get(partCol))),
-        dataSchema = StructType(pinned.get.fields.filterNot(fl =>
-          fl.name == partCol || fl.name == "gen").toIndexedSeq),
-        bucketSpec = None,
-        fileFormat = new ParquetFileFormat,
-        options = Map.empty)(spark)
+    val snap = GenTable.snapshot(spark, dir, partCol,
+      asOfGen = parameters.get("asOfGen").map(_.toLong).orElse(sufGen),
+      asOfTs = parameters.get("asOfTs").map(_.toLong).orElse(sufTs))
+    snap.schema match {
+      case Some(pinned) if snap.tombFiles.isEmpty =>
+        fileRelation(spark, snap, pinned, withGen = false)
+      case _ => new GenTableMaskedRelation(spark, snap)
+    }
+  }
+
+  /** The snapshot's winning files as Spark's native parquet relation over
+    * a [[GenFileIndex]]: columns (payload…, partCol), plus the `gen`
+    * partition column before partCol when `withGen` (what
+    * [[GenTable.read]] masks tombstones by).
+    */
+  private[sources] def fileRelation(spark: SparkSession,
+      snap: GenTable.Snapshot, pinned: StructType,
+      withGen: Boolean): HadoopFsRelation = {
+    val index = new GenFileIndex(spark, snap, pinned, withGen)
+    HadoopFsRelation(index,
+      partitionSchema = index.partitionSchema,
+      dataSchema = index.dataSchema,
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat,
+      options = Map.empty)(spark)
   }
 }
 
-/** The generation-resolved file listing as a Spark [[FileIndex]]: one
-  * immutable SNAPSHOT of the table (resolution pinned at construction,
-  * like a lake connector's log snapshot — a concurrent merge committing
-  * mid-query cannot shear the file set). Each winning
-  * (generation, partition) directory lists as one [[PartitionDirectory]]
-  * whose partition value is the partCol alone — the `gen` level is
-  * resolution metadata the SQL user never sees.
+/** A [[GenTable.Snapshot]]'s file listing as a Spark [[FileIndex]]: the
+  * scan of [[GenTable.read]] and of the SQL surface's native path. The
+  * resolution is the snapshot's, pinned at construction like a lake
+  * connector's log snapshot — a concurrent merge committing mid-query
+  * cannot shear the file set — and Spark lists nothing itself. Each
+  * winning (generation, partition) directory lists as one
+  * [[PartitionDirectory]] whose partition value is the partCol alone, or
+  * (gen, partCol) when `withGen`: the `gen` level is resolution metadata
+  * the SQL user never sees, and the column [[GenTable.read]]'s tombstone
+  * mask compares.
   */
 private[sources] class GenFileIndex(
-    spark: SparkSession, dir: String, partCol: String,
-    resolved: Seq[(Long, Seq[String])], pinned: StructType)
-    extends FileIndex {
+    spark: SparkSession, snap: GenTable.Snapshot, pinned: StructType,
+    withGen: Boolean) extends FileIndex {
 
+  private val dir = snap.dir
   private val fs = new org.apache.hadoop.fs.Path(dir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private val partType: DataType = pinned(partCol).dataType
 
-  override val partitionSchema: StructType =
-    StructType(Seq(StructField(partCol, partType, nullable = true)))
+  override val partitionSchema: StructType = StructType(
+    (if (withGen) Seq(pinned("gen")) else Nil) :+
+      StructField(snap.partCol, pinned(snap.partCol).dataType,
+        nullable = true))
 
   private[sources] val dataSchema: StructType =
     StructType(pinned.fields.filterNot(fl =>
-      fl.name == partCol || fl.name == "gen").toIndexedSeq)
+      fl.name == snap.partCol || fl.name == "gen").toIndexedSeq)
 
-  /** (gen, decoded partition value, typed partition row, files) per
-    * winning directory — enumerated once at construction (driver
-    * metadata: one listing per winning generation + one per winning
-    * partition directory).
-    */
+  /** (gen, typed partition row, files) per winning directory. */
   private val entries: Seq[(Long, InternalRow,
-      Seq[org.apache.hadoop.fs.FileStatus])] = resolved.flatMap {
-    case (g, vals) =>
-      val claimed = vals.map(GenTable.decN).toSet
-      val genDir = new org.apache.hadoop.fs.Path(s"$dir/data/gen=$g")
-      if (!fs.exists(genDir)) Seq.empty
-      else fs.listStatus(genDir).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith(s"$partCol="))
-        .flatMap { st =>
-          val raw = st.getPath.getName.drop(partCol.length + 1)
-          val value: String =
-            if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-            else ExternalCatalogUtils.unescapePathName(raw)
-          if (!claimed.contains(value)) None
-          else {
-            val files = fs.listStatus(st.getPath).toSeq
-              .filter(fl => fl.isFile &&
-                fl.getPath.getName.endsWith(".parquet"))
-            Some((g, InternalRow(castPart(value)), files))
-          }
-        }
+      Seq[org.apache.hadoop.fs.FileStatus])] = snap.parts.map { p =>
+    (p.gen, if (withGen) InternalRow(p.gen, p.value) else InternalRow(p.value),
+      p.files)
   }
-
-  /** The directory name's string form cast to the partition column's
-    * pinned type — analysis-time Catalyst cast, the same rule
-    * [[GenTable.resolveCond]] applies to manifest literals.
-    */
-  private def castPart(v: String): Any =
-    if (v == null) null
-    else ce.Cast(
-      ce.Literal(UTF8String.fromString(v),
-        org.apache.spark.sql.types.StringType),
-      partType,
-      Option(spark.sessionState.conf.sessionLocalTimeZone)).eval(null)
 
   override def rootPaths: Seq[org.apache.hadoop.fs.Path] =
     Seq(new org.apache.hadoop.fs.Path(s"$dir/data"))
@@ -438,7 +413,7 @@ private[sources] class GenFileIndex(
   }
 
   /** A recorded min/max string cast to the column's type (Catalyst's
-    * cast, interpreted over one literal — [[castPart]]'s rule).
+    * cast, interpreted over one literal).
     */
   private def castStr(s: String, dt: DataType): Any =
     if (s == null) null
@@ -519,14 +494,23 @@ private[sources] class GenFileIndex(
   * tombstones and restores the native [[GenFileIndex]] path.
   */
 private[graft] class GenTableMaskedRelation(
-    spark: SparkSession, dir: String, partCol: String,
-    asOf: Option[Long]) extends BaseRelation with PrunedFilteredScan {
+    spark: SparkSession, snap: GenTable.Snapshot)
+    extends BaseRelation with PrunedFilteredScan {
+
+  def this(spark: SparkSession, dir: String, partCol: String,
+      asOf: Option[Long]) =
+    this(spark, GenTable.snapshot(spark, dir, partCol, asOf))
+
+  private val (dir, partCol, asOf) = (snap.dir, snap.partCol, snap.pin)
 
   override def sqlContext: SQLContext = spark.sqlContext
 
+  // each scan resolves the table afresh, as a new read would; the
+  // relation's own snapshot gives its schema
   private def view = GenTable.read(spark, dir, partCol, asOf)
 
-  override val schema: StructType = view.schema
+  override val schema: StructType =
+    GenTable.readSnapshot(spark, snap).schema
 
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
     filters

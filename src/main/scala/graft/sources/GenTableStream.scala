@@ -468,8 +468,7 @@ object GenTableStream {
     */
   def streamSchema(spark: SparkSession, dir: String,
       partCol: String): StructType = {
-    val resolved = GenTable.claims(spark, dir, None)
-    val pinned = GenTable.pinnedSchema(spark, dir, partCol, resolved)
+    val pinned = GenTable.snapshot(spark, dir, partCol).schema
       .getOrElse(throw new IllegalStateException(
         s"gentable stream at $dir: the table has no readable " +
           "generation to pin a schema from"))

@@ -207,9 +207,10 @@ object IncrementalPipeline {
       // the SAME pickup→target-append→ledger-append transaction; the
       // default stays the reference-exact divide form
       convert: (DataFrame, DataFrame, Timestamp) => DataFrame = convertBatch): BatchResult = {
-    recoverLedger(spark, ledgerDir) // repair an interrupted batch or swap
-    val (fs, led) = fsFor(spark, ledgerDir)
-    val consumed = readConsumed(fs, led)
+    // repair an interrupted batch or swap; its listings serve the batch
+    val listed = recover(spark, ledgerDir)
+    val (fs, _) = fsFor(spark, ledgerDir)
+    val consumed = consumedLines(fs, listed.consumed)
     val (srcFs, src) = fsFor(spark, sourceDir)
     require(srcFs.exists(src), s"source directory $sourceDir does not exist")
     val root = srcFs.makeQualified(src).toUri
@@ -228,7 +229,8 @@ object IncrementalPipeline {
     // of the reference's bare LIMIT; the q46-declared primitive when the
     // cap can bind, every fresh row (no top-K) when it cannot
     val pick =
-      if (underCap) pickFresh(spark, source, ledgerDir, Some(footerRows.last))
+      if (underCap)
+        pickFresh(spark, source, ledgerDir, Some(footerRows.last), listed.top)
       else counted(pickup(source, ledgerIds(spark, ledgerDir, source),
         "order_id", maxBatch).cache(), Some(maxBatch.toLong))
     try {
@@ -240,7 +242,7 @@ object IncrementalPipeline {
           targetDir, ledgerDir, pick.bloom)
       // R6: an empty batch appends nothing; its files are still consumed
       if (underCap || pick.n < maxBatch)
-        writeConsumed(fs, new Path(led, ConsumedDir), unread.map(_._1),
+        writeConsumed(fs, new Path(ledgerDir, ConsumedDir), unread.map(_._1),
           GenCommit.newToken())
       BatchResult(pick.n, pick.n)
     } finally pick.rows.unpersist() // a scheduler polling a drained source
@@ -260,15 +262,16 @@ object IncrementalPipeline {
     * anti-join against the whole ledger is the pick ([[Fallback]]).
     * `bound`, when known, is at least the number of fresh rows and sizes
     * the batch's Bloom inside that one job; without it the Bloom takes a
-    * second job over the cached pick.
+    * second job over the cached pick. `top` is the ledger directory's
+    * listing from [[recover]].
     */
   private def pickFresh(spark: SparkSession, fresh: DataFrame,
-      ledgerDir: String, bound: Option[Long]): Pick = {
+      ledgerDir: String, bound: Option[Long], top: Seq[FileStatus]): Pick = {
     def exact(from: DataFrame): Pick =
       counted(from.join(ledgerIds(spark, ledgerDir, from), Seq("order_id"),
         "left_anti").cache(), bound)
     val (fs, led) = fsFor(spark, ledgerDir)
-    loadBlooms(spark, fs, led) match {
+    loadBlooms(spark, fs, led, Some(top)) match {
       case Left(missing) =>
         fellBack(MissingBloom, s"${missing.size} file(s), first " +
           missing.head)
@@ -452,11 +455,17 @@ object IncrementalPipeline {
     }.toOption.flatten
 
   /** The Blooms of every data file in the ledger at `led`, or the names of
-    * the files without a valid one.
+    * the files without a valid one. `top`, when given, is a listing of
+    * `led` taken since its last change, and the ledger is not listed
+    * again.
     */
-  private[graft] def loadBlooms(spark: SparkSession, fs: FileSystem, led: Path)
+  private[graft] def loadBlooms(spark: SparkSession, fs: FileSystem, led: Path,
+      top: Option[Seq[FileStatus]] = None)
       : Either[Seq[String], Array[BloomFilter]] = {
-    val files = ParquetSchema.dataFiles(spark, led.toString)
+    // the ledger is flat: its data files are its visible files
+    val files = top.fold(ParquetSchema.dataFiles(spark, led.toString))(
+      _.filter(f => f.isFile && visible(f.getPath.getName))
+        .sortBy(_.getPath.toString))
     val blooms = files.map(readBloom(fs, led, _))
     if (blooms.forall(_.isDefined)) Right(blooms.flatten.toArray)
     else Left(files.zip(blooms).collect { case (f, None) => f.getPath.getName })
@@ -506,14 +515,14 @@ object IncrementalPipeline {
     s"${root.relativize(f.getPath.toUri).getRawPath}\t${f.getLen}\t" +
       s"${f.getModificationTime}"
 
-  private def listOrEmpty(fs: FileSystem, dir: Path): Seq[FileStatus] =
-    try fs.listStatus(dir).toSeq
-    catch { case _: java.io.FileNotFoundException => Nil }
-
   /** Every line of the ledger's consumed record. */
   private def readConsumed(fs: FileSystem, led: Path): Set[String] =
-    listOrEmpty(fs, new Path(led, ConsumedDir))
-      .filter(s => visible(s.getPath.getName))
+    consumedLines(fs, GenCommit.listOrEmpty(fs, new Path(led, ConsumedDir)))
+
+  /** Every line of the consumed-record files `files` (a listing of it). */
+  private def consumedLines(fs: FileSystem, files: Seq[FileStatus])
+      : Set[String] =
+    files.filter(s => visible(s.getPath.getName))
       .flatMap(s => GenCommit.readSmallFile(fs, s.getPath).split("\n"))
       .filter(_.nonEmpty).toSet
 
@@ -606,26 +615,43 @@ object IncrementalPipeline {
     * compaction of this ledger is running.
     */
   def recoverLedger(spark: SparkSession, ledgerDir: String): Unit = {
+    recover(spark, ledgerDir)
+    ()
+  }
+
+  /** What [[recover]] leaves listed: the ledger directory's entries and
+    * its consumed-record files, each listed once and valid until the
+    * ledger next changes.
+    */
+  private final case class Listed(top: Seq[FileStatus],
+      consumed: Seq[FileStatus])
+
+  /** [[recoverLedger]], returning its listings for the batch to use. */
+  private def recover(spark: SparkSession, ledgerDir: String): Listed = {
     val (fs, dir) = fsFor(spark, ledgerDir)
     val bak = new Path(ledgerDir + ".old")
     if (!fs.exists(dir)) {
       if (fs.exists(bak))
         require(fs.rename(bak, dir), s"could not restore ledger backup $bak")
-      else return
+      else return Listed(Nil, Nil)
     }
     fs.delete(new Path(dir, StagingDir), true)
-    listOrEmpty(fs, new Path(dir, ConsumedDir))
-      .map(_.getPath).filter(_.getName.startsWith(".tmp-"))
-      .foreach(fs.delete(_, false))
-    val blooms = listOrEmpty(fs, new Path(dir, BloomDir)).map(_.getPath)
+    val (tmps, consumed) =
+      GenCommit.listOrEmpty(fs, new Path(dir, ConsumedDir))
+        .partition(_.getPath.getName.startsWith(".tmp-"))
+    tmps.foreach(t => fs.delete(t.getPath, false))
+    val top = GenCommit.listOrEmpty(fs, dir)
+    val blooms =
+      GenCommit.listOrEmpty(fs, new Path(dir, BloomDir)).map(_.getPath)
     if (blooms.nonEmpty) {
-      val files = listOrEmpty(fs, dir).map(_.getPath.getName).toSet
+      val files = top.map(_.getPath.getName).toSet
       blooms.filter { p =>
         val n = p.getName
         n.startsWith(".tmp-") ||
           n.endsWith(BloomSuffix) && !files(n.stripSuffix(BloomSuffix))
       }.foreach(fs.delete(_, false))
     }
+    Listed(top, consumed)
   }
 
   /** The target with PK semantics enforced on read: keep-first per
@@ -674,8 +700,9 @@ object IncrementalPipeline {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val ts = batchTs
-        recoverLedger(spark, ledgerDir) // a killed micro-batch's staging
-        val pick = pickFresh(spark, batch, ledgerDir, None)
+        // a killed micro-batch's staging
+        val listed = recover(spark, ledgerDir)
+        val pick = pickFresh(spark, batch, ledgerDir, None, listed.top)
         try {
           if (pick.n > 0)
             append(spark, convert(pick.rows, rates, ts),
