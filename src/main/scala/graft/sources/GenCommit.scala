@@ -136,6 +136,23 @@ object GenCommit {
     try f.listStatus(dir).toSeq
     catch { case _: java.io.FileNotFoundException => Nil }
 
+  /** The first parquet file under `dir` (recursively), or None when `dir`
+    * does not exist or holds none — a generation directory whose
+    * partitions were all emptied carries no schema.
+    */
+  def firstParquet(f: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path)
+      : Option[org.apache.hadoop.fs.FileStatus] = {
+    if (!f.exists(dir)) return None
+    val it = f.listFiles(dir, true)
+    var found = Option.empty[org.apache.hadoop.fs.FileStatus]
+    while (found.isEmpty && it.hasNext) {
+      val s = it.next()
+      if (s.getPath.getName.endsWith(".parquet")) found = Some(s)
+    }
+    found
+  }
+
   /** The committed set AS OF generation `asOf` — the reader-side pin
     * that makes index reads reproducible (VERDICT r13 #2): a probe
     * running concurrently with an append can pin the snapshot it

@@ -10,7 +10,6 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The SQL/catalog surface for [[GenTable]] (VERDICT r16 #1): the lake
   * table as a real Spark data source, so every standard access path —
@@ -26,9 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * parquet, whole-stage codegen, filter pushdown into footers) — it
   * only needs to be told WHICH files. So the connector is a custom
   * [[FileIndex]] ([[GenFileIndex]]: the winning files of one
-  * [[GenTable.snapshot]] + filestats min/max and bloom skipping, all
-  * driver-side metadata) handed to Spark's own [[HadoopFsRelation]] —
-  * the same relation [[GenTable.read]] scans. A DataSource V2
+  * [[GenTable.snapshot]] + min/max and bloom file skipping through
+  * [[GenTable.Sidecars]], all driver-side metadata) handed to Spark's
+  * own [[HadoopFsRelation]] — the same relation [[GenTable.read]]
+  * scans. A DataSource V2
   * `TableProvider` would instead force a hand-rolled
   * `PartitionReaderFactory` — reimplementing the vectorized parquet
   * reader or dropping to row-at-a-time — which is why Delta Lake's own
@@ -36,20 +36,22 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Pruning lands IN THE PLAN: partition predicates reach
   * `listFiles(partitionFilters, …)` and prune claimed partitions; data
-  * predicates on stats-clustered columns reach `(…, dataFilters)` and
-  * prune FILES through the same `filestats` sidecars as
-  * [[GenTable.readWhere]] — the scan's `numFiles` metric shows the
-  * skipped set (SqlApiSpec pins files-opened < files-present).
+  * predicates reach `(…, dataFilters)` and prune FILES through the same
+  * [[GenTable.Sidecars]] rule [[GenTable.readWhere]] and
+  * [[GenTable.readWhereEq]] apply to their snapshot — the scan's
+  * `numFiles` metric shows the skipped set (SqlApiSpec pins
+  * files-opened < files-present).
   *
   * ROW TOMBSTONES make the view a join (data anti-masked by
   * later-generation tombstones), which no file listing can express; a
   * table with committed tombstones in its view serves through
   * [[GenTableMaskedRelation]] instead — a `PrunedFilteredScan` that
   * delegates to [[GenTable.read]]'s plan (pushing column pruning and
-  * translatable filters into it, so the INNER parquet scan still
-  * prunes), at the cost of one row-conversion boundary. Compaction
-  * folds tombstones away and restores the native path — the same
-  * "deletes cost until maintenance" trade the lake formats make.
+  * translatable filters into it, so the INNER [[GenFileIndex]] scan
+  * still prunes partitions and skips files), at the cost of one
+  * row-conversion boundary. Compaction folds tombstones away and
+  * restores the native path — the same "deletes cost until
+  * maintenance" trade the lake formats make.
   *
   * Reference anchor: the reference's consumers arrive through SQL
   * (init/postgres-2/init.sql defines the BI-read target table); this
@@ -245,10 +247,6 @@ private[sources] class GenFileIndex(
     spark: SparkSession, snap: GenTable.Snapshot, pinned: StructType,
     withGen: Boolean) extends FileIndex {
 
-  private val dir = snap.dir
-  private val fs = new org.apache.hadoop.fs.Path(dir)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   override val partitionSchema: StructType = StructType(
     (if (withGen) Seq(pinned("gen")) else Nil) :+
       StructField(snap.partCol, pinned(snap.partCol).dataType,
@@ -258,70 +256,38 @@ private[sources] class GenFileIndex(
     StructType(pinned.fields.filterNot(fl =>
       fl.name == snap.partCol || fl.name == "gen").toIndexedSeq)
 
-  /** (gen, typed partition row, files) per winning directory. */
-  private val entries: Seq[(Long, InternalRow,
-      Seq[org.apache.hadoop.fs.FileStatus])] = snap.parts.map { p =>
-    (p.gen, if (withGen) InternalRow(p.gen, p.value) else InternalRow(p.value),
-      p.files)
-  }
+  /** The directory's partition row: (partCol) or (gen, partCol). */
+  private def row(p: GenTable.Snapshot.Part): InternalRow =
+    if (withGen) InternalRow(p.gen, p.value) else InternalRow(p.value)
+
+  private val sidecars = new GenTable.Sidecars(spark, snap.dir)
 
   override def rootPaths: Seq[org.apache.hadoop.fs.Path] =
-    Seq(new org.apache.hadoop.fs.Path(s"$dir/data"))
+    Seq(new org.apache.hadoop.fs.Path(s"${snap.dir}/data"))
 
   override def listFiles(
       partitionFilters: Seq[ce.Expression],
       dataFilters: Seq[ce.Expression]): Seq[PartitionDirectory] = {
     // 1. partition pruning: evaluate the pushed partition predicate
-    //    against each entry's partition row (InMemoryFileIndex's rule)
+    //    against each directory's partition row (InMemoryFileIndex's rule)
     val partPruned = partitionFilters.reduceOption(ce.And) match {
-      case None => entries
+      case None => snap.parts
       case Some(pred) =>
         val bound = ce.Predicate.createInterpreted(pred.transform {
           case a: ce.AttributeReference =>
             ce.BoundReference(partitionSchema.fieldIndex(a.name),
               a.dataType, nullable = true)
         })
-        entries.filter { case (_, row, _) => bound.eval(row) }
+        snap.parts.filter(p => bound.eval(row(p)))
     }
     // 2. file skipping: conservative (col, lo?, hi?) bounds extracted
-    //    from the pushed data predicates, pruned per generation through
-    //    the filestats sidecars — readWhere's skipping, in the SQL plan
-    val conds = dataFilters.flatMap(rangeBounds)
+    //    from the pushed data predicates, each cutting the files down to
+    //    the ones the sidecars admit
+    dataFilters.flatMap(rangeBounds)
       .filter { case (c, _, _) => dataSchema.fieldNames.contains(c) }
-    if (conds.isEmpty)
-      partPruned.map { case (_, row, files) =>
-        PartitionDirectory(row, files.toArray) }
-    else {
-      val gens = partPruned.map(_._1).distinct
-      // per (gen, condition): Some(allowed rel-paths) or None = no
-      // sidecar for the column there (all files pass — unskipped).
-      // Equality conditions consult BOTH sidecars: min/max stats (the
-      // clustered case) and the per-file bloom (the unclustered
-      // point-key case, VERDICT r16 #7) — intersected when both exist
-      val allowed: Map[(Long, Int), Option[Set[String]]] = (for {
-        g <- gens; (cnd, i) <- conds.zipWithIndex
-      } yield {
-        val st = statsAllowed(g, cnd._1, cnd._2, cnd._3)
-        val bl = (cnd._2, cnd._3) match {
-          case (Some(lo), Some(hi)) if lo == hi =>
-            bloomAllowed(g, cnd._1, lo)
-          case _ => None
-        }
-        (g, i) -> ((st, bl) match {
-          case (Some(a), Some(b)) => Some(a intersect b)
-          case (a, b) => a.orElse(b)
-        })
-      }).toMap
-      partPruned.map { case (g, row, files) =>
-        val kept = files.filter { fl =>
-          val p = fl.getPath.toString
-          val tag = s"/gen=$g/"
-          val rel = p.substring(p.indexOf(tag) + tag.length)
-          conds.indices.forall(i => allowed((g, i)).forall(_.contains(rel)))
-        }
-        PartitionDirectory(row, kept.toArray)
-      }
-    }
+      .foldLeft(partPruned) { case (ps, (c, lo, hi)) =>
+        sidecars.admit(ps, c, dataSchema(c).dataType, lo, hi) }
+      .map(p => PartitionDirectory(row(p), p.files.toArray))
   }
 
   /** Conservative range extraction from a pushed data predicate:
@@ -360,121 +326,11 @@ private[sources] class GenFileIndex(
     }
   }
 
-  /** Parsed sidecars, one read+parse per generation per kind for the
-    * index's lifetime (ADVICE r17 medium: re-reading and spinning up a
-    * driver Spark job per (generation × predicate bound) inside
-    * listFiles — which the planner may invoke several times per query —
-    * billed G × C planning-time jobs on a many-generation table).
-    * Driver-local metadata, file-count-sized.
-    */
-  // ConcurrentHashMap.computeIfAbsent, not a scala mutable.Map (ADVICE
-  // r18 medium: listFiles runs at PLANNING time, and concurrent queries
-  // sharing a cached relation — a cached named table, a reused
-  // DataFrame — plan in parallel; racing getOrElseUpdate on an
-  // unsynchronized map can corrupt it)
-  private val statsCache = new java.util.concurrent.ConcurrentHashMap[
-    Long, Seq[(String, String, String, String)]]()
-  private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
-    Long, Seq[(String, String,
-      org.apache.spark.util.sketch.BloomFilter)]]()
-
-  /** One generation's allowed files for a bound — the [[GenTable
-    * .readWhere]] sidecar rule: a file passes iff its recorded
-    * [min, max] intersects the bound. The typed compare runs as an
-    * INTERPRETED Catalyst comparison over driver-local literals (the
-    * same Cast + ordering semantics the old DataFrame filter had, with
-    * zero Spark jobs — this is planning-time metadata work); all-null
-    * files never match a comparison and are skipped.
-    */
-  private def statsAllowed(g: Long, colName: String,
-      lo: Option[Any], hi: Option[Any]): Option[Set[String]] = {
-    val entries = statsCache.computeIfAbsent(g, _ => {
-      val s = GenCommit.readSmallFile(fs,
-        new org.apache.hadoop.fs.Path(s"$dir/filestats/$g"))
-      (if (s.isEmpty) Seq.empty[String] else s.split("\n").toSeq)
-        .map(_.split("\t", -1))
-        .collect { case a if a.length == 4 =>
-          (java.net.URLDecoder.decode(a(0), "UTF-8"),
-            java.net.URLDecoder.decode(a(1), "UTF-8"),
-            GenTable.decN(a(2)), GenTable.decN(a(3))) }
-    }).filter(_._2 == colName)
-    if (entries.isEmpty) None
-    else {
-      val dt = dataSchema(colName).dataType
-      val loC = lo.map(castScala(_, dt))
-      val hiC = hi.map(castScala(_, dt))
-      Some(entries.filter { case (_, _, mn, mx) =>
-        loC.forall(v => cmpTrue(ce.GreaterThanOrEqual(
-          ce.Literal(castStr(mx, dt), dt), ce.Literal(v, dt)))) &&
-        hiC.forall(v => cmpTrue(ce.LessThanOrEqual(
-          ce.Literal(castStr(mn, dt), dt), ce.Literal(v, dt))))
-      }.map(_._1).toSet)
-    }
-  }
-
-  /** A recorded min/max string cast to the column's type (Catalyst's
-    * cast, interpreted over one literal).
-    */
-  private def castStr(s: String, dt: DataType): Any =
-    if (s == null) null
-    else ce.Cast(
-      ce.Literal(UTF8String.fromString(s),
-        org.apache.spark.sql.types.StringType), dt,
-      Option(spark.sessionState.conf.sessionLocalTimeZone)).eval(null)
-
-  /** A pushed Scala-side bound value cast to the column's type (the
-    * `lit(v).cast(dt)` the DataFrame filter evaluated, interpreted).
-    */
-  private def castScala(v: Any, dt: DataType): Any =
-    ce.Cast(ce.Literal(v), dt,
-      Option(spark.sessionState.conf.sessionLocalTimeZone)).eval(null)
-
-  /** Interpreted comparison over two literals — null-rejecting like the
-    * DataFrame filter it replaces (a null min/max or uncastable bound
-    * never matches).
-    */
-  private def cmpTrue(e: ce.Expression): Boolean =
-    e.eval(null) == true
-
-  /** One generation's bloom-allowed files for an equality bound —
-    * [[GenTable.readWhereEq]]'s sidecar rule through the same Catalyst
-    * might-contain path (no hand-rolled hash to drift). Blooms
-    * deserialize once per generation into [[bloomCache]].
-    */
-  private def bloomAllowed(g: Long, colName: String,
-      value: Any): Option[Set[String]] = {
-    val entries = bloomCache.computeIfAbsent(g, _ => {
-      val s = GenCommit.readSmallFile(fs,
-        new org.apache.hadoop.fs.Path(s"$dir/blooms/$g"))
-      (if (s.isEmpty) Seq.empty[String] else s.split("\n").toSeq)
-        .map(_.split("\t", -1))
-        .collect { case a if a.length == 3 =>
-          (java.net.URLDecoder.decode(a(0), "UTF-8"),
-            java.net.URLDecoder.decode(a(1), "UTF-8"),
-            org.apache.spark.util.sketch.BloomFilter.readFrom(
-              new java.io.ByteArrayInputStream(
-                java.util.Base64.getDecoder.decode(a(2))))) }
-    }).filter(_._2 == colName)
-    if (entries.isEmpty) None
-    else {
-      val dt = dataSchema(colName).dataType
-      val h = keyHashCache.computeIfAbsent((colName, value),
-        _ => GenTable.keyHash(spark, value, dt))
-      Some(entries.filter(_._3.mightContainLong(h)).map(_._1).toSet)
-    }
-  }
-
-  /** xxhash64 of a lookup key is generation-independent — one 1-row
-    * evaluation per (column, value) for the index's lifetime, not one
-    * per generation.
-    */
-  private val keyHashCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Any), Long]()
-
   override def inputFiles: Array[String] =
-    entries.flatMap(_._3.map(_.getPath.toString)).toArray
+    snap.parts.flatMap(_.files.map(_.getPath.toString)).toArray
 
-  override def sizeInBytes: Long = entries.flatMap(_._3.map(_.getLen)).sum
+  override def sizeInBytes: Long =
+    snap.parts.flatMap(_.files.map(_.getLen)).sum
 
   /** A GenFileIndex is one pinned snapshot — refresh is a no-op by
     * design (re-resolving mid-plan would shear the file set; a new read
@@ -487,11 +343,14 @@ private[sources] class GenFileIndex(
   * view data ⟕ tombstones (a join no file listing expresses), the SQL
   * surface serves [[GenTable.read]]'s plan through a V1
   * `PrunedFilteredScan` — required columns and every translatable
-  * filter are pushed INTO that plan (so its inner parquet scan still
-  * prunes and pushes down), every filter is also declared unhandled
-  * (Spark re-applies above — double-filtering is safe, missing one is
-  * not). One row-conversion boundary of cost; compaction folds the
-  * tombstones and restores the native [[GenFileIndex]] path.
+  * filter are pushed INTO that plan, every filter is also declared
+  * unhandled (Spark re-applies above — double-filtering is safe, missing
+  * one is not). Catalyst moves the pushed data filters below the mask's
+  * left outer join into the plan's [[GenFileIndex]] scan, so its
+  * `listFiles` skips files through the sidecars exactly as on the native
+  * path: tombstones do not forfeit file skipping. One row-conversion
+  * boundary of cost; compaction folds the tombstones and restores the
+  * native path.
   */
 private[graft] class GenTableMaskedRelation(
     spark: SparkSession, snap: GenTable.Snapshot)
@@ -515,56 +374,12 @@ private[graft] class GenTableMaskedRelation(
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
     filters
 
-  /** FILE SKIPPING through the masked path (r18): tombstones force this
-    * V1 relation, but they must not also forfeit sidecar pruning — a
-    * point lookup on a 100 TB table would open every winning file until
-    * the next compaction. One pushed predicate elects the sidecar-
-    * pruned ENTRY VIEW instead of the plain read: an equality routes
-    * through [[GenTable.readWhereEq]] (bloom sidecars), a two-sided
-    * range on one column through [[GenTable.readWhere]] (min/max
-    * stats). Both are semantically `read().filter(pred)` by their
-    * contract (mask included; sidecar-less generations contribute all
-    * files — never wrong, at worst unskipped), so the elected filter
-    * is consumed and everything else pushes on top as before.
-    */
-  private[graft] def skippingView(filters: Seq[Filter])
-      : Option[(org.apache.spark.sql.DataFrame, Seq[Filter])] = {
-    val cols = schema.fieldNames.toSet
-    filters.collectFirst {
-      case f @ EqualTo(a, v) if v != null && cols.contains(a) =>
-        (GenTable.readWhereEq(spark, dir, partCol, a, v, asOf),
-          filters.filterNot(_ eq f))
-    }.orElse {
-      // a two-sided range: lo ≤ a ≤ hi from any >=/<= (or >/<,
-      // conservative as bounds) pair on one column
-      val lo = filters.collectFirst {
-        case f @ GreaterThanOrEqual(a, v) if v != null && cols(a) =>
-          (f: Filter, a, v)
-        case f @ GreaterThan(a, v) if v != null && cols(a) =>
-          (f: Filter, a, v)
-      }
-      lo.flatMap { case (lf, a, lv) =>
-        filters.collectFirst {
-          case f @ LessThanOrEqual(b, v) if b == a && v != null =>
-            (f: Filter, v)
-          case f @ LessThan(b, v) if b == a && v != null =>
-            (f: Filter, v)
-        }.map { case (hf, hv) =>
-          (GenTable.readWhere(spark, dir, partCol, a, lv, hv, asOf),
-            filters.filterNot(x => (x eq lf) || (x eq hf)))
-        }
-      }
-    }
-  }
-
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
-    val (entry, rest) = skippingView(filters.toIndexedSeq)
-      .getOrElse((view, filters.toIndexedSeq))
-    val pushed = rest.flatMap(f => toColumn(f).map(_._1))
+    val pushed = filters.toIndexedSeq.flatMap(f => toColumn(f).map(_._1))
       .reduceOption(_ && _)
-    val base = pushed.map(entry.filter).getOrElse(entry)
-    base.select(requiredColumns.toIndexedSeq.map(col): _*).rdd
+    pushed.map(view.filter).getOrElse(view)
+      .select(requiredColumns.toIndexedSeq.map(col): _*).rdd
   }
 
   /** V1 filter → (Column, exact), best-effort (None = not pushed; Spark

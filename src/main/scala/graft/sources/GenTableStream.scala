@@ -208,16 +208,8 @@ class GenTableStream(spark: SparkSession, dir: String, partCol: String,
     } else {
       val claimedVals = readClaims(g).map(GenTable.decN)
       val genDir = new org.apache.hadoop.fs.Path(s"$dir/data/gen=$g")
-      def hasParquet: Boolean = {
-        if (!fs.exists(genDir)) return false
-        val it = fs.listFiles(genDir, true)
-        var found = false
-        while (!found && it.hasNext)
-          found = it.next().getPath.getName.endsWith(".parquet")
-        found
-      }
       val newC =
-        if (!hasParquet) emptyRows
+        if (GenCommit.firstParquet(fs, genDir).isEmpty) emptyRows
         else aligned(spark.read.schema(StructType(tableFields))
           .parquet(genDir.toString))
       val oldC = preState.filter(GenTable.valuesPred(partCol,
@@ -272,14 +264,6 @@ class GenTableStream(spark: SparkSession, dir: String, partCol: String,
   private def genData(g: Long): DataFrame = {
     val claimedVals = readClaims(g).map(GenTable.decN)
     val genDir = new org.apache.hadoop.fs.Path(s"$dir/data/gen=$g")
-    def hasParquet: Boolean = {
-      if (!fs.exists(genDir)) return false
-      val it = fs.listFiles(genDir, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
     // which claimed partition values actually have data dirs — the
     // rest are EMPTIED partitions and emit markers
     val present: Set[String] =
@@ -295,7 +279,7 @@ class GenTableStream(spark: SparkSession, dir: String, partCol: String,
             .ExternalCatalogUtils.unescapePathName(raw)
         }.toSet
     val dataPart: Option[DataFrame] =
-      if (!hasParquet) None
+      if (GenCommit.firstParquet(fs, genDir).isEmpty) None
       else Some(spark.read.schema(StructType(tableFields))
         .parquet(genDir.toString)
         .withColumn("_gen", lit(g)).withColumn("_change", lit("data")))

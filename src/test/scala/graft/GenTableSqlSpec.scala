@@ -715,12 +715,13 @@ class GenTableSqlSpec extends SparkSuite {
   }
 
   test("masked-path file skipping: tombstones do not forfeit sidecar " +
-      "pruning — a pushed equality elects the bloom-pruned entry view, " +
-      "a two-sided range the stats-pruned one, and SQL answers stay " +
-      "exact") {
-    import org.apache.spark.sql.sources.{EqualTo => VEq,
+      "pruning — filters pushed into the masked scan skip files below " +
+      "the mask, and SQL answers stay exact") {
+    import org.apache.spark.sql.sources.{Filter, EqualTo => VEq,
       GreaterThanOrEqual => VGe, LessThanOrEqual => VLe}
-    val dir = s"${TempRoots.create("graft_mask_skip_")}/t"
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.counting.impl", classOf[CountingFs].getName)
+    val dir = s"counting://${TempRoots.create("graft_mask_skip_")}/t"
     val rows = (1 to 400).map(i => (i * 37 % 1000L, s"P${i % 2}",
       i.toDouble))
     spark.conf.set("spark.sql.shuffle.partitions", "8")
@@ -737,15 +738,17 @@ class GenTableSqlSpec extends SparkSuite {
       None)
     val total = GenTable.read(spark, dir, "p").inputFiles.length
     val key = rows(17)._1
-    val Some((eqView, rest)) =
-      rel.skippingView(Seq(VEq("k", key), VGe("v", 1.0)))
-    assert(rest == Seq(VGe("v", 1.0)), "equality must be consumed")
-    assert(eqView.inputFiles.length < total,
-      s"bloom skipping lost on the masked path: " +
-        s"${eqView.inputFiles.length} of $total")
-    val Some((rgView, _)) =
-      rel.skippingView(Seq(VGe("v", 10.0), VLe("v", 20.0)))
-    assert(rgView.inputFiles.length <= total)
+    // the distinct data files one collected scan of the relation opens
+    def opened(filters: Filter*): Int = {
+      CountingFs.reset()
+      rel.buildScan(Array("k", "v", "p"), filters.toArray).collect()
+      CountingFs.calls.collect {
+        case ("open", p) if p.contains("/data/gen=") => p }.distinct.size
+    }
+    val eqOpened = opened(VEq("k", key), VGe("v", 1.0))
+    assert(eqOpened < total,
+      s"bloom skipping lost on the masked path: $eqOpened of $total")
+    assert(opened(VGe("v", 10.0), VLe("v", 20.0)) <= total)
     // end-to-end SQL over the masked table stays exact, victim masked
     val got = spark.sql(s"SELECT k, v FROM gentable.`$dir` WHERE k = $key")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
