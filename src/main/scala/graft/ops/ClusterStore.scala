@@ -84,9 +84,13 @@ object ClusterStore {
     * racing from one snapshot collide on the same claim file and the
     * loser fails LOUDLY here with nothing staged — re-read and re-merge
     * to retry. The read itself pins `asOfGen = snapshot`, so the labels
-    * merged are exactly the fenced state. (A claim left by a CRASHED
-    * merge blocks the slot until [[compact]] wipes it — the documented
-    * remedy, per [[graft.sources.GenCommit]]'s resetCommits.)
+    * merged are exactly the fenced state. The read, the merge and the
+    * staged write run inside [[graft.sources.GenCommit.withClaim]]: an
+    * in-process failure before publishing (a bad delta schema, a failed
+    * stage write) releases the claim, so the next merge retries at once.
+    * (A claim left by a CRASHED merge blocks the slot until
+    * [[graft.sources.GenCommit.recoverClaims]] releases it or [[compact]]
+    * wipes it.)
     */
   def merge(
       spark: SparkSession,
@@ -94,30 +98,20 @@ object ClusterStore {
       deltaPairs: DataFrame,
       aCol: String = "doc_a",
       bCol: String = "doc_b"): Unit = {
-    val base = graft.sources.GenCommit.lastCommitted(spark, dir)
-    val tk = graft.sources.GenCommit.newToken()
-    require(graft.sources.GenCommit.tryClaim(spark, dir, base + 1, tk),
-      s"ClusterStore.merge: generation ${base + 1} at $dir is already " +
+    import graft.sources.GenCommit
+    val base = GenCommit.lastCommitted(spark, dir)
+    val (gen, tk) = (base + 1, GenCommit.newToken())
+    require(GenCommit.tryClaim(spark, dir, gen, tk),
+      s"ClusterStore.merge: generation $gen at $dir is already " +
         "claimed — a concurrent merge is in flight (re-read and retry) " +
         "or a crashed one left its claim (recoverClaims releases it " +
         "without a compact)")
-    try {
+    GenCommit.withClaim(spark, dir, gen, Seq("labels")) {
       val cur = read(spark, dir, asOfGen = Some(base))
       val (_, rewired) = Text.ccMergeParts(cur, deltaPairs, aCol, bCol)
-      Store.commitClaimed(spark, dir, base + 1, tk)(stageLabels(rewired, _))
-    } catch {
-      case t: Throwable =>
-        // an IN-PROCESS failure before anything was promoted (bad delta
-        // schema, transient stage-write failure) releases our own claim
-        // so the next merge retries at zero cost — only a generation
-        // that began publishing stays burned (its dir exists; crash
-        // semantics unchanged, compact still the remedy there)
-        val f = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!f.exists(new org.apache.hadoop.fs.Path(
-            s"$dir/labels/gen=${base + 1}")))
-          graft.sources.GenCommit.releaseClaim(spark, dir, base + 1)
-        throw t
+      stageLabels(rewired, GenCommit.stagePath(dir, gen, _, tk))
+      Some(GenCommit.publish(spark, dir, gen, Seq("labels"), tk,
+        claimed = true))
     }
   }
 

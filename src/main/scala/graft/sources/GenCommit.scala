@@ -101,11 +101,7 @@ object GenCommit {
     */
   def committedMarks(spark: SparkSession,
       indexDir: String): Seq[(Long, Long)] =
-    commitsListing(spark, indexDir)
-      .map(st => st.getPath.getName -> st.getModificationTime)
-      .collect { case (n, t) if n.nonEmpty && n.forall(_.isDigit) =>
-        n.toLong -> t }
-      .sortBy(_._1)
+    marksIn(commitsListing(spark, indexDir))
 
   /** The entries of `commits/`: markers and claims, one listing. */
   private[sources] def commitsListing(spark: SparkSession,
@@ -113,12 +109,20 @@ object GenCommit {
     listOrEmpty(fsOf(spark, indexDir),
       new org.apache.hadoop.fs.Path(s"$indexDir/commits"))
 
+  /** The committed generations in a [[commitsListing]], with their
+    * markers' modification times, by id.
+    */
+  private[sources] def marksIn(
+      commits: Seq[org.apache.hadoop.fs.FileStatus]): Seq[(Long, Long)] =
+    commits.map(st => st.getPath.getName -> st.getModificationTime)
+      .collect { case (n, t) if n.nonEmpty && n.forall(_.isDigit) =>
+        n.toLong -> t }
+      .sortBy(_._1)
+
   /** The committed ids in a [[commitsListing]]. */
   private[sources] def committedIn(
       commits: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Long] =
-    commits.map(_.getPath.getName)
-      .collect { case n if n.nonEmpty && n.forall(_.isDigit) => n.toLong }
-      .sorted
+    marksIn(commits).map(_._1)
 
   /** The claimed ids in a [[commitsListing]]. */
   private[sources] def claimedIn(
@@ -476,12 +480,8 @@ object GenCommit {
     // crashed claimant either way, which [[recoverClaims]] releases.
     if (!createExclusive(f, p)) false
     else {
-      if (token.nonEmpty || declare.nonEmpty) {
-        val out = f.create(p, true)
-        try out.write((token +: declare).mkString("\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
+      if (token.nonEmpty || declare.nonEmpty)
+        writeSmallFile(f, p, (token +: declare).mkString("\n"))
       true
     }
   }
@@ -519,6 +519,16 @@ object GenCommit {
       p: org.apache.hadoop.fs.Path): String =
     readSmallFileOpt(f, p).getOrElse("")
 
+  /** Write `body` to `p` as UTF-8, replacing any file there — the writer
+    * of the small metadata files [[readSmallFile]] reads.
+    */
+  def writeSmallFile(f: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, body: String): Unit = {
+    val out = f.create(p, true)
+    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
   /** [[readSmallFile]], None if the file is absent — one `open`, no
     * separate existence check.
     */
@@ -553,19 +563,43 @@ object GenCommit {
     fsOf(spark, indexDir).delete(
       new org.apache.hadoop.fs.Path(s"$indexDir/$TombsTable"), true)
 
-  /** Release a claim THIS WRITER owns and has not begun publishing —
-    * the CAS-failure cleanup ([[graft.ops.ClusterStore.merge]]): a
-    * transient in-process failure between claim and publish would
-    * otherwise burn the snapshot+1 slot until a compaction. Owner-only
-    * by contract, and ONLY safe while no table dir for `gen` exists (a
-    * partially-published generation must stay burned — the caller
-    * checks before releasing).
+  /** Delete generation `gen`'s claim file. Owner-only by contract, and
+    * ONLY safe while no table dir for `gen` exists (a partially-published
+    * generation must stay burned): [[withClaim]] checks that before it
+    * releases; the recovery paths ([[recoverClaims]],
+    * [[graft.sources.GenTable.recover]]) run in a single-writer window.
     */
   def releaseClaim(spark: SparkSession, indexDir: String,
       gen: Long): Unit = {
     val f = fsOf(spark, indexDir)
     f.delete(
       new org.apache.hadoop.fs.Path(s"$indexDir/commits/$Claim$gen"), false)
+  }
+
+  /** Run a claimed writer's `body` for generation `gen`, which this
+    * writer has just claimed — the one path from claim to publish for
+    * every claimed writer (the [[StandingStore]] appends,
+    * [[graft.ops.ClusterStore.merge]], every [[GenTable]] statement,
+    * its compaction and its replace). `body` stages, then publishes and
+    * returns Some, or returns None when it has nothing to commit. When it
+    * returns None or throws, the claim is released, so the next writer
+    * claims at once instead of waiting on (or failing over) a dead id —
+    * unless some table in `tables` holds a `gen=<gen>` directory: then
+    * publishing began, and a partially-published generation stays burned
+    * ([[nextGen]]'s invariant; [[graft.sources.GenTable.recover]] or a
+    * compaction is the remedy there).
+    */
+  def withClaim[T](spark: SparkSession, indexDir: String, gen: Long,
+      tables: Seq[String])(body: => Option[T]): Option[T] = {
+    def release(): Unit = {
+      val f = fsOf(spark, indexDir)
+      if (!tables.exists(t =>
+          f.exists(new org.apache.hadoop.fs.Path(s"$indexDir/$t/gen=$gen"))))
+        releaseClaim(spark, indexDir, gen)
+    }
+    val out = try body catch { case t: Throwable => release(); throw t }
+    if (out.isEmpty) release()
+    out
   }
 
   /** The highest committed generation, with the module's friendly error
@@ -584,8 +618,10 @@ object GenCommit {
     * finished writing every [[stagePath]] (Spark leaves `_SUCCESS`,
     * which is checked — promoting a half-written stage is data loss).
     * `claimed = true` says the caller already owns `gen` via
-    * [[claimNextGen]] (the append path); `false` claims here (the build
-    * path, which owns the whole index dir it just created).
+    * [[claimNextGen]] or [[tryClaim]] (the append path, which publishes
+    * inside [[withClaim]]: a failure before the first rename releases the
+    * claim there, one after it keeps the id burned); `false` claims here
+    * (the build path, which owns the whole index dir it just created).
     */
   def publish(spark: SparkSession, indexDir: String, gen: Long,
       tables: Seq[String], token: String = "",
@@ -646,10 +682,7 @@ object GenCommit {
     // this writer owns. A crash in the window leaves an empty marker —
     // committed, timestamp unknown (the pre-r18 state), which the
     // timestamp resolution treats as inheriting its predecessor's stamp.
-    val out = f.create(marker, true)
-    try out.write(clockMs().toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeSmallFile(f, marker, clockMs().toString)
   }
 
   /** The wall clock commit markers stamp with — a SEAM so gates and
@@ -788,11 +821,9 @@ object GenCommit {
   def recoverClaims(spark: SparkSession, indexDir: String,
       tables: Seq[String]): Seq[Long] = {
     val f = fsOf(spark, indexDir)
-    val commitsDir = new org.apache.hadoop.fs.Path(s"$indexDir/commits")
-    if (!f.exists(commitsDir)) return Seq.empty
-    val claimed = claimedGens(spark, indexDir)
-    val marked = committed(spark, indexDir).toSet
-    claimed.filter { g =>
+    val listing = commitsListing(spark, indexDir)
+    val marked = committedIn(listing).toSet
+    claimedIn(listing).filter { g =>
       // a marker means the publish COMPLETED and the claim is just its
       // normal residue — never touch it; a gen dir means publishing
       // began — the id stays burned
@@ -849,10 +880,7 @@ object GenCommit {
     // (the VACUUM contract) instead of silently resolving to collapsed
     // content
     val marker = new org.apache.hadoop.fs.Path(st, gen.toString)
-    val out = f.create(marker, true)
-    try out.write(clockMs().toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeSmallFile(f, marker, clockMs().toString)
     require(f.createNewFile(new org.apache.hadoop.fs.Path(st, "_SUCCESS")))
     SwapDir.swap(spark, indexDir, "commits")
   }

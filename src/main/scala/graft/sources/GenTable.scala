@@ -62,7 +62,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object GenTable {
 
-  private val DataTable = Seq("data")
   // every table tree a generation may write: data (init/merge/compact)
   // and the row-tombstone table (deleteRows) — id burning, claim
   // recovery and compaction must scan both
@@ -96,10 +95,7 @@ object GenTable {
     val f = fsOf(spark, dir)
     val p = new org.apache.hadoop.fs.Path(s"$dir/manifests/$gen")
     f.mkdirs(p.getParent)
-    val out = f.create(p, true)
-    try out.write(values.map(enc).sorted.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    GenCommit.writeSmallFile(f, p, values.map(enc).sorted.mkString("\n"))
   }
 
   private def readManifest(spark: SparkSession, dir: String,
@@ -149,27 +145,21 @@ object GenTable {
     val f = fsOf(spark, dir)
     val pcp = new org.apache.hadoop.fs.Path(s"$dir/partcol")
     f.mkdirs(pcp.getParent)
-    val out = f.create(pcp, true)
-    try out.write(Seq(partCol, df.schema(partCol).dataType.catalogString)
-      .mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    GenCommit.writeSmallFile(f, pcp,
+      Seq(partCol, df.schema(partCol).dataType.catalogString).mkString("\n"))
     // persist the LAYOUT choices (r18): statements arriving through the
     // SQL surface (UPDATE/INSERT, the sink) have no statsCols parameter
     // to pass — without a record, a stats-maintained table would write
     // stats-less (correct but unskipped) generations on every SQL DML.
     // Three lines: statsCols CSV, zorder flag, bloomCols CSV.
-    if (statsCols.nonEmpty || zorder || bloomCols.nonEmpty) {
-      val lp = new org.apache.hadoop.fs.Path(s"$dir/layout")
-      val out2 = f.create(lp, true)
-      try out2.write(Seq(statsCols.mkString(","), zorder.toString,
-        bloomCols.mkString(",")).mkString("\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out2.close()
-    }
-    stageData(df, dir, 0L, partCol, tk, statsCols, zorder, bloomCols)
+    if (statsCols.nonEmpty || zorder || bloomCols.nonEmpty)
+      GenCommit.writeSmallFile(f, new org.apache.hadoop.fs.Path(
+        s"$dir/layout"), Seq(statsCols.mkString(","), zorder.toString,
+        bloomCols.mkString(",")).mkString("\n"))
+    val zb = stageData(df, dir, 0L, partCol, tk, statsCols, zorder, bloomCols)
     writeManifest(spark, dir, 0L, touched)
-    GenCommit.publish(spark, dir, 0L, DataTable, tk)
+    GenCommit.publish(spark, dir, 0L, Seq("data"), tk)
+    zb.foreach(recordZBounds(spark, dir, _))
   }
 
   /** TRANSACTIONAL whole-table replacement (ADVICE r18 high: INSERT
@@ -196,10 +186,10 @@ object GenTable {
     * overlapping writer serializes it (rebase-and-retry's wait), and a
     * writer arriving mid-replace conflicts loudly. The claim is never
     * released on success: the whole tree it lives in is swapped away.
-    * On failure before the swap it is released, leaving the table as it
-    * was. History is FRESH after a replace (generation 0 — the
-    * INSERT OVERWRITE contract, like [[compact]]'s): stale as-of pins
-    * fail loudly.
+    * On failure before the swap [[GenCommit.withClaim]] releases it,
+    * leaving the table as it was. History is FRESH after a replace
+    * (generation 0 — the INSERT OVERWRITE contract, like [[compact]]'s):
+    * stale as-of pins fail loudly.
     */
   def replace(df: DataFrame, dir: String, partCol: String,
       statsCols: Seq[String] = Nil, zorder: Boolean = false,
@@ -221,22 +211,22 @@ object GenTable {
     }
     // serialize against in-flight writers: the replacement conflicts
     // with everything (the deleteRows/compact rule)
-    val tk = GenCommit.newToken()
-    val (_, gen) = claimDisjoint(spark, dir, Set(AllMark), tk, "replace")
-    try {
+    val gen = claimDisjoint(spark, dir, Set(AllMark), GenCommit.newToken(),
+      "replace").gen
+    GenCommit.withClaim(spark, dir, gen, AllTables) {
       f.delete(stagedPath, true) // stray garbage from a crashed attempt
-      init(df, stagedPath.toString, partCol, statsCols, zorder, bloomCols)
-      // the swap-level completeness marker (SwapDir refuses without it)
-      require(f.createNewFile(
-        new org.apache.hadoop.fs.Path(stagedPath, "_SUCCESS")),
-        s"replace: could not mark the staged table complete at $stagedPath")
-    } catch {
-      case t: Throwable =>
-        // live tree untouched — free the claim so the table stays
-        // writable, and drop the partial stage
-        GenCommit.releaseClaim(spark, dir, gen)
-        f.delete(stagedPath, true)
-        throw t
+      try {
+        init(df, stagedPath.toString, partCol, statsCols, zorder, bloomCols)
+        // the swap-level completeness marker (SwapDir refuses without it)
+        Some(require(f.createNewFile(
+          new org.apache.hadoop.fs.Path(stagedPath, "_SUCCESS")),
+          s"replace: could not mark the staged table complete at " +
+            stagedPath))
+      } catch {
+        // live tree untouched: drop the partial stage (withClaim frees
+        // the claim, so the table stays writable)
+        case t: Throwable => f.delete(stagedPath, true); throw t
+      }
     }
     SwapDir.swap(spark, parent, name)
   }
@@ -342,25 +332,31 @@ object GenTable {
     * boundaries (one approxQuantile pass over the delta to fetch them —
     * delta-proportional, build-side only; readers never see the
     * z-value, only the recorded min/max per real column).
+    *
+    * Returns the z-bounds record the layout computed, staged for
+    * [[recordZBounds]] once the generation commits (None when the
+    * recorded one served, or the layout is not z-ordered). `rezone`
+    * ignores the recorded boundaries and computes fresh ones.
     */
   private def stageData(df: DataFrame, dir: String, gen: Long,
       partCol: String, tk: String, statsCols: Seq[String],
-      zorder: Boolean = false, bloomCols: Seq[String] = Nil): Unit = {
-    val out =
-      if (statsCols.isEmpty) df
+      zorder: Boolean = false, bloomCols: Seq[String] = Nil,
+      rezone: Boolean = false): Option[org.apache.hadoop.fs.Path] = {
+    val (out, zb) =
+      if (statsCols.isEmpty) (df, None)
       else if (!zorder)
-        df.repartitionByRange((partCol +: statsCols).map(col): _*)
+        (df.repartitionByRange((partCol +: statsCols).map(col): _*), None)
       else {
-        val z = zorderColumn(df, statsCols,
-          zorderBounds(df, dir, statsCols))
-        df.withColumn("__z", z)
+        val (bounds, zb) = zorderBounds(df, dir, statsCols, rezone)
+        (df.withColumn("__z", zorderColumn(df, statsCols, bounds))
           .repartitionByRange(col(partCol), col("__z"))
-          .drop("__z")
+          .drop("__z"), zb)
       }
     val staged = GenCommit.stagePath(dir, gen, "data", tk)
     out.write.mode("overwrite").partitionBy(partCol).parquet(staged)
     writeFileStats(df.sparkSession, dir, gen, staged, statsCols)
     writeFileBlooms(df.sparkSession, dir, gen, staged, bloomCols)
+    zb
   }
 
   /** Per-file bloom sidecars (VERDICT r16 #7): `dir/blooms/<gen>` holds
@@ -407,10 +403,7 @@ object GenTable {
     val f = fsOf(spark, dir)
     val p = new org.apache.hadoop.fs.Path(s"$dir/blooms/$gen")
     f.mkdirs(p.getParent)
-    val o = f.create(p, true)
-    try o.write(lines.sorted.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally o.close()
+    GenCommit.writeSmallFile(f, p, lines.sorted.mkString("\n"))
   }
 
   /** Bloom sizing: expected distinct keys per file / filter bits.
@@ -437,19 +430,25 @@ object GenTable {
     * and the skipping tightness GenTableSpec pins, never row content —
     * so reusing init-time ones costs a little z-locality under heavy
     * distribution drift and nothing else; re-init/[[repartitionTable]]
-    * re-records them (the drift remedy, noted in SCALE.md). A record
-    * whose column list no longer matches the requested layout is
-    * recomputed and overwritten; the file is table metadata like
-    * `layout`/`tombkeys` (within-table, rebuilt from inputs on every
-    * run — nothing persists across bench runs).
+    * and [[compact]] (`rezone`) re-record them (the drift remedy, noted
+    * in SCALE.md). A record whose column list no longer matches the
+    * requested layout is recomputed and replaced. A computed record is
+    * written to a hidden temp file, returned beside the boundaries, and
+    * becomes the record only once its statement commits
+    * ([[recordZBounds]]): a statement that fails leaves `dir/zbounds`
+    * as it was. The file is table metadata like `layout`/`tombkeys`
+    * (within-table, rebuilt from inputs on every run — nothing persists
+    * across bench runs).
     */
   private def zorderBounds(df: DataFrame, dir: String,
-      statsCols: Seq[String]): IndexedSeq[Array[Double]] = {
+      statsCols: Seq[String], rezone: Boolean)
+      : (IndexedSeq[Array[Double]], Option[org.apache.hadoop.fs.Path]) = {
     val spark = df.sparkSession
     val f = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/zbounds")
     val nb = 1 << ZBits
-    val recorded = GenCommit.readSmallFile(f, p)
+    val recorded = if (rezone) ""
+      else GenCommit.readSmallFile(f, new org.apache.hadoop.fs.Path(
+        s"$dir/zbounds"))
     if (recorded.nonEmpty) {
       // a torn/truncated record (left by a writer that predates the
       // temp + rename write below) must fall through to the recompute-
@@ -466,7 +465,7 @@ object GenTable {
       // other length mismatch means a foreign/corrupt record — recompute
       if (byCol.map(_._1) == statsCols.toIndexedSeq &&
           byCol.forall(t => t._2.isEmpty || t._2.length == nb - 1))
-        return byCol.map(_._2)
+        return (byCol.map(_._2), None)
     }
     val qs = (1 until nb).map(_.toDouble / nb).toArray
     // numeric columns only (approxQuantile's domain) — the range layout
@@ -479,20 +478,27 @@ object GenTable {
       enc(c) + "\t" + bs.map(java.lang.Double.toString).mkString(",")
     }
     // temp + rename: a writer that dies mid-write leaves only a hidden
-    // temp file, never a torn record. Hadoop's rename refuses an existing
-    // destination, so a stale record is dropped first — a reader in that
-    // window finds no record and recomputes, which is never wrong
+    // temp file, never a torn record
     val tmp = new org.apache.hadoop.fs.Path(
       s"$dir/.zbounds.tmp_${GenCommit.newToken()}")
-    val o = f.create(tmp, true)
-    try o.write(lines.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally o.close()
+    GenCommit.writeSmallFile(f, tmp, lines.mkString("\n"))
+    (bounds, Some(tmp))
+  }
+
+  /** Make `tmp`, a record [[zorderBounds]] computed, the table's
+    * `dir/zbounds` — after the statement that computed it committed.
+    * Hadoop's rename refuses an existing destination, so a stale record
+    * is dropped first — a reader in that window finds no record and
+    * recomputes, which is never wrong.
+    */
+  private def recordZBounds(spark: SparkSession, dir: String,
+      tmp: org.apache.hadoop.fs.Path): Unit = {
+    val f = fsOf(spark, dir)
+    val p = new org.apache.hadoop.fs.Path(s"$dir/zbounds")
     if (!f.rename(tmp, p)) {
       f.delete(p, false)
       if (!f.rename(tmp, p)) f.delete(tmp, false)
     }
-    bounds
   }
 
   /** The z-value: each column's 256-bucket quantile rank (boundaries
@@ -555,16 +561,15 @@ object GenTable {
     val f = fsOf(spark, dir)
     val p = new org.apache.hadoop.fs.Path(s"$dir/filestats/$gen")
     f.mkdirs(p.getParent)
-    val o = f.create(p, true)
-    try o.write(lines.sorted.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally o.close()
+    GenCommit.writeSmallFile(f, p, lines.sorted.mkString("\n"))
   }
 
   /** FILE SKIPPING: the one reader of the sidecars [[writeFileStats]] and
     * [[writeFileBlooms]] record, used by [[readWhere]], [[readWhereEq]]
     * and the SQL scan's [[GenFileIndex.listFiles]]. Each generation's
-    * sidecars are read and parsed at most once per instance — planning
+    * sidecars are read and parsed at most once per instance, and a
+    * [[Snapshot]] carries one instance that its copies share — so a
+    * `readWhere`'s cut and its scan's planning parse them once. Planning
     * may list a relation's files several times, and queries sharing a
     * cached relation plan in parallel, hence the concurrent maps. All of
     * it is driver-local metadata work with no Spark job.
@@ -707,7 +712,10 @@ object GenTable {
   }
 
   /** Write a resolution checkpoint every [[LogCkptEvery]] commits —
-    * called after a successful publish; one commits listing + one
+    * called after a successful publish, over `committed`: the statement
+    * claim's own `commits/` listing plus the generation it committed (a
+    * checkpoint over any committed subset is exact — readers merge the
+    * generations it does not cover by the max rule). That set and one
     * small read decide, and the write itself is one full manifest walk
     * (amortized: 1/interval extra manifest reads per commit) plus one
     * partition-count-sized file, staged and RENAMED so readers never
@@ -722,17 +730,15 @@ object GenTable {
     * checkpoint, or a post-compaction reset, simply fails the subset
     * test and falls back (never wrong, at worst unaccelerated).
     */
-  private def writeLogCkptIfDue(spark: SparkSession, dir: String): Unit = {
+  private def writeLogCkptIfDue(spark: SparkSession, dir: String,
+      committed: Seq[Long]): Unit = {
     val f = fsOf(spark, dir)
-    val committed = GenCommit.committed(spark, dir)
     // a checkpoint covers at least LogCkptEvery commits: none is due yet
     if (committed.size < LogCkptEvery) return
     val ckDir = new org.apache.hadoop.fs.Path(s"$dir/logckpts")
-    val newest =
-      if (!f.exists(ckDir)) None
-      else f.listStatus(ckDir).toSeq.map(_.getPath.getName)
-        .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
-        .maxOption
+    val newest = GenCommit.listOrEmpty(f, ckDir).map(_.getPath.getName)
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
+      .maxOption
     val coveredCount = newest.map { g =>
       val s = GenCommit.readSmallFile(f,
         new org.apache.hadoop.fs.Path(s"$dir/logckpts/$g"))
@@ -755,9 +761,7 @@ object GenTable {
     val tmp = new org.apache.hadoop.fs.Path(
       s"$dir/logckpts/.tmp_${GenCommit.newToken()}")
     f.mkdirs(tmp.getParent)
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    GenCommit.writeSmallFile(f, tmp, body)
     val dst = new org.apache.hadoop.fs.Path(
       s"$dir/logckpts/${committed.max}")
     if (!f.rename(tmp, dst)) f.delete(tmp, false)
@@ -833,6 +837,8 @@ object GenTable {
     *                  with their data files
     * @param tombKeys  the delete key columns; empty without tombstones
     * @param tombFiles the committed tombstone files, by generation
+    * @param sidecars  the file-skipping sidecars' reader, shared by the
+    *                  snapshot's copies
     */
   final case class Snapshot(dir: String, partCol: String,
       pin: Option[Long], marks: Seq[(Long, Long)], gens: Seq[Long],
@@ -840,7 +846,8 @@ object GenTable {
       partType: Option[org.apache.spark.sql.types.DataType],
       schema: Option[org.apache.spark.sql.types.StructType],
       parts: Seq[Snapshot.Part], tombKeys: Seq[String],
-      tombFiles: Seq[(Long, org.apache.hadoop.fs.FileStatus)])
+      tombFiles: Seq[(Long, org.apache.hadoop.fs.FileStatus)])(
+      private[sources] val sidecars: Sidecars)
 
   object Snapshot {
     /** A winning directory: its generation, its partition value (typed as
@@ -867,8 +874,16 @@ object GenTable {
     val all = marks.map(_._1)
     require(all.nonEmpty,
       s"no committed generations at $dir — init the table first")
-    val pin = asOfTs.map(t => genAt(spark, dir, t, all)).orElse(asOfGen)
-    val gens = GenCommit.pinned(dir, all, pin)
+    resolve(spark, dir, partCol, marks,
+      asOfTs.map(t => genAt(spark, dir, t, all)).orElse(asOfGen))
+  }
+
+  /** [[snapshot]] over the committed `marks` the caller already holds,
+    * pinned at `pin`.
+    */
+  private def resolve(spark: SparkSession, dir: String, partCol: String,
+      marks: Seq[(Long, Long)], pin: Option[Long]): Snapshot = {
+    val gens = GenCommit.pinned(dir, marks.map(_._1), pin)
     val resolved = claimsOver(spark, dir, gens)
     val recorded = partColTypeOf(spark, dir)
     // the footer's data schema; with schema merging requested, Spark's
@@ -899,21 +914,24 @@ object GenTable {
       GenCommit.committedTombFiles(spark, dir, gens).getOrElse(Nil)
     Snapshot(dir, partCol, pin, marks.filter(m => gens.contains(m._1)),
       gens, resolved, recorded, schema, parts,
-      if (tombFiles.isEmpty) Nil else tombKeys(spark, dir), tombFiles)
+      if (tombFiles.isEmpty) Nil else tombKeys(spark, dir), tombFiles)(
+      new Sidecars(spark, dir))
   }
 
-  /** Unpinned snapshot `s` pinned at `base`, a generation committed since
-    * it was resolved from: `s` itself when the markers at or below `base`
-    * are exactly the ones `s` holds — committed generations never change
-    * — and otherwise resolved afresh. One commits listing when it holds.
+  /** The table as the statement holding claim `c` reads it: pinned at the
+    * claim's base and resolved from the claim's own `commits/` listing,
+    * with no second listing — `held`, an unpinned snapshot, itself when
+    * its commit set is the listing's (committed generations never
+    * change). A generation at or below the base that commits after the
+    * listing was then an outstanding claim declared disjoint from the
+    * statement's, so the partitions the statement touches read the same
+    * without it.
     */
-  private def pinnedAt(spark: SparkSession, s: Snapshot,
-      base: Long): Snapshot = {
-    val marks = GenCommit.committedMarks(spark, s.dir)
-    if (s.pin.isEmpty && marks.exists(_._1 == base) &&
-        marks.filter(_._1 <= base) == s.marks) s.copy(pin = Some(base))
-    else snapshot(spark, s.dir, s.partCol, asOfGen = Some(base))
-  }
+  private def snapshotAt(spark: SparkSession, dir: String, partCol: String,
+      c: Claim, held: Option[Snapshot] = None): Snapshot =
+    held.filter(s => s.pin.isEmpty && s.marks == c.marks)
+      .map(s => s.copy(pin = Some(c.base))(s.sidecars))
+      .getOrElse(resolve(spark, dir, partCol, c.marks, Some(c.base)))
 
   /** The newest resolved generation holding a data file, and that file:
     * the first of `listed(g)`, else the first parquet file under the
@@ -1161,9 +1179,8 @@ object GenTable {
     val s = snapshot(spark, dir, partCol, asOfGen)
     s.schema.fold(emptyView(spark, s)) { sch =>
       val dt = sch(column).dataType
-      val kept = new Sidecars(spark, dir)
-        .admit(s.parts, column, dt, Some(lo), Some(hi))
-      readSnapshot(spark, s.copy(parts = kept)).filter(pred(dt))
+      val kept = s.sidecars.admit(s.parts, column, dt, Some(lo), Some(hi))
+      readSnapshot(spark, s.copy(parts = kept)(s.sidecars)).filter(pred(dt))
     }
   }
 
@@ -1276,31 +1293,17 @@ object GenTable {
     val touched = delta.select(col(partCol)).distinct()
       .collect().map(_.get(0)).toSeq
     if (touched.isEmpty) return
-    val tk = GenCommit.newToken()
-    val (base, gen) =
-      claimDisjoint(spark, dir, touched.map(enc).toSet, tk, "merge",
-        overlapWaitMs = overlapWaitMs)
-    try {
-      val cur = read(spark, dir, partCol, asOfGen = Some(base))
+    commitStatement(spark, dir, touched.map(enc).toSet, "merge",
+        overlapWaitMs) { claim =>
+      val cur = readSnapshot(spark, snapshotAt(spark, dir, partCol, claim))
       val slice = guardedSlice(cur, delta, keys, partCol, touched)
       val merged = graft.ops.Merge.upsert(slice, delta, keys, opCol,
         seqCol, evolveSchema)
-      stageData(merged, dir, gen, partCol, tk, statsCols, zorder,
-        bloomCols)
       // the manifest claims EVERY touched value — also the ones the
       // merged output no longer contains: that claim with no data dir IS
-      // the emptied partition (committed atomically with the data by the
-      // marker below)
-      writeManifest(spark, dir, gen, touched)
-      GenCommit.publish(spark, dir, gen, DataTable, tk, claimed = true)
-      writeLogCkptIfDue(spark, dir)
-    } catch {
-      case t: Throwable =>
-        val f = fsOf(spark, dir)
-        if (!f.exists(new org.apache.hadoop.fs.Path(
-            s"$dir/data/gen=$gen")))
-          GenCommit.releaseClaim(spark, dir, gen)
-        throw t
+      // the emptied partition (committed atomically with the data)
+      Some(Staged(touched, stageData(merged, dir, claim.gen, partCol,
+        claim.tk, statsCols, zorder, bloomCols)))
     }
   }
 
@@ -1365,9 +1368,10 @@ object GenTable {
       .drop("__part_chk", "__delta_part", "__delta_present")
   }
 
-  /** The disjoint-writer admission loop: returns `(base, gen)` where
-    * `base` is the last committed generation this writer read and `gen`
-    * its successfully claimed id, such that EVERY id in `(base, gen)` is
+  /** The disjoint-writer admission loop: returns the [[Claim]] on `gen`,
+    * this writer's successfully claimed id, with the `commits/` listing it
+    * was claimed from, whose newest committed generation `base` is the
+    * one this writer reads — such that EVERY id in `(base, gen)` is
     * an outstanding claim whose declaration is disjoint from
     * `declareEnc` (manifest-encoded partition values; [[AllMark]]
     * conflicts with everything, and so does a claim with no
@@ -1377,12 +1381,15 @@ object GenTable {
     * handed out densely ([[GenCommit.nextGen]] counts claims), so when
     * this writer wins id g every id below g existed at enumeration
     * time. Losing a race costs a directory listing, never staged work
-    * (the claim is taken before any read or write job).
+    * (the claim is taken before any read or write job). The winning
+    * listing then serves the statement's snapshot ([[snapshotAt]]) and its
+    * checkpoint decision ([[writeLogCkptIfDue]]): one `commits/` listing
+    * per statement.
     */
   private def claimDisjoint(spark: SparkSession, dir: String,
       declareEnc: Set[String], tk: String, verb: String,
       attempts: Int = 16,
-      overlapWaitMs: Long = OverlapWaitMs): (Long, Long) = {
+      overlapWaitMs: Long = OverlapWaitMs): Claim = {
     val f2 = fsOf(spark, dir)
     val deadline = System.nanoTime() + overlapWaitMs * 1000000L
     var tries = attempts
@@ -1464,7 +1471,7 @@ object GenTable {
           }
         if (GenCommit.tryClaim(spark, dir, gen, tk,
             declare = declareEnc.toSeq.sorted))
-          return (base, gen)
+          return Claim(gen, tk, listing)
         }
       }
     }
@@ -1474,6 +1481,54 @@ object GenTable {
         "declaration: a writer that died mid-claim-write; recover() " +
         "frees it), or ids claimed outside this protocol")
   }
+
+  /** A statement's claim: the generation it writes, its writer token, and
+    * the `commits/` listing [[claimDisjoint]] claimed it from, whose
+    * newest committed generation — `base` — the statement reads at.
+    */
+  private final case class Claim(gen: Long, tk: String,
+      listing: Seq[org.apache.hadoop.fs.FileStatus]) {
+    lazy val marks: Seq[(Long, Long)] = GenCommit.marksIn(listing)
+    def base: Long = marks.last._1
+  }
+
+  /** What a claimed writer staged for [[publishGen]]: the partition values
+    * its manifest claims, and the z-bounds record its layout computed
+    * ([[stageData]]), if any.
+    */
+  private final case class Staged(values: Seq[Any],
+      zbounds: Option[org.apache.hadoop.fs.Path] = None)
+
+  /** The one path of a write statement: [[claimDisjoint]] on `declare`,
+    * then [[publishGen]] of what `stage` stages under that claim into
+    * `table`, then [[writeLogCkptIfDue]] over the claim's listing plus the
+    * new generation. `stage` returns None when there is nothing to commit
+    * (the claim is then released).
+    */
+  private def commitStatement(spark: SparkSession, dir: String,
+      declare: Set[String], verb: String, overlapWaitMs: Long,
+      table: String = "data")(stage: Claim => Option[Staged]): Unit = {
+    val c = claimDisjoint(spark, dir, declare, GenCommit.newToken(), verb,
+      overlapWaitMs = overlapWaitMs)
+    if (publishGen(spark, dir, c.gen, c.tk, table)(stage(c)).isDefined)
+      writeLogCkptIfDue(spark, dir, c.marks.map(_._1) :+ c.gen)
+  }
+
+  /** What every claimed GenTable writer runs once it holds the claim on
+    * `gen`, inside [[GenCommit.withClaim]]: `stage`, then the manifest,
+    * the publish of `table` and the z-bounds record. Returns what it
+    * committed, None when `stage` had nothing to commit.
+    */
+  private def publishGen(spark: SparkSession, dir: String, gen: Long,
+      tk: String, table: String)(stage: => Option[Staged]): Option[Staged] =
+    GenCommit.withClaim(spark, dir, gen, Seq(table)) {
+      stage.map { s =>
+        writeManifest(spark, dir, gen, s.values)
+        GenCommit.publish(spark, dir, gen, Seq(table), tk, claimed = true)
+        s.zbounds.foreach(recordZBounds(spark, dir, _))
+        s
+      }
+    }
 
   /** How long an overlap-conflicted writer waits for the in-flight
     * writer ahead of it before concluding it crashed (5 minutes — far
@@ -1532,32 +1587,16 @@ object GenTable {
         "read-side mask ambiguous; one key shape per table")
     val del = keys.distinct()
     if (del.isEmpty) return // no generation for an empty delete
-    val tk = GenCommit.newToken()
     // a delete's effect spans every partition (it outranks all lower
     // generations), so it declares ALL and conflicts with any in-flight
     // writer — and any later writer conflicts with it until it commits
-    val (_, gen) =
-      claimDisjoint(spark, dir, Set(AllMark), tk, "deleteRows",
-        overlapWaitMs = overlapWaitMs)
-    try {
-      del.write.mode("overwrite")
-        .parquet(GenCommit.stagePath(dir, gen, GenCommit.TombsTable, tk))
-      if (prior.isEmpty) {
-        val out = f.create(tkPath, true)
-        try out.write(keyCols.mkString("\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      writeManifest(spark, dir, gen, Seq.empty)
-      GenCommit.publish(spark, dir, gen, Seq(GenCommit.TombsTable),
-        tk, claimed = true)
-      writeLogCkptIfDue(spark, dir)
-    } catch {
-      case t: Throwable =>
-        if (!f.exists(new org.apache.hadoop.fs.Path(
-            s"$dir/${GenCommit.TombsTable}/gen=$gen")))
-          GenCommit.releaseClaim(spark, dir, gen)
-        throw t
+    commitStatement(spark, dir, Set(AllMark), "deleteRows", overlapWaitMs,
+        GenCommit.TombsTable) { claim =>
+      del.write.mode("overwrite").parquet(
+        GenCommit.stagePath(dir, claim.gen, GenCommit.TombsTable, claim.tk))
+      if (prior.isEmpty)
+        GenCommit.writeSmallFile(f, tkPath, keyCols.mkString("\n"))
+      Some(Staged(Nil)) // the manifest claims no partition
     }
   }
 
@@ -1613,45 +1652,31 @@ object GenTable {
       s"updateWhere: assigning the partition column $partCol would move " +
         "rows between partitions mid-claim — express a partition move " +
         "as a merge (delete + insert)")
-    val tk = GenCommit.newToken()
-    val (base, gen) =
-      claimDisjoint(spark, dir, Set(AllMark), tk, "updateWhere",
-        overlapWaitMs = overlapWaitMs)
-    try {
-      val cur = read(spark, dir, partCol, asOfGen = Some(base))
+    commitStatement(spark, dir, Set(AllMark), "updateWhere",
+        overlapWaitMs) { claim =>
+      val cur = readSnapshot(spark, snapshotAt(spark, dir, partCol, claim))
       sets.foreach { case (c, _) => require(cur.columns.contains(c),
         s"updateWhere: SET names column $c, not in the table " +
           s"(${cur.columns.mkString(", ")})") }
       val touched = cur.filter(cond).select(col(partCol)).distinct()
         .collect().map(_.get(0)).toSeq
-      if (touched.isEmpty) {
-        GenCommit.releaseClaim(spark, dir, gen) // nothing staged
-        return
+      Option.when(touched.nonEmpty) { // nothing to commit otherwise
+        val slice = cur.filter(
+          valuesPred(partCol, touched, cur.schema(partCol).dataType))
+        val setMap = sets.toMap
+        val out = slice.select(cur.columns.toIndexedSeq.map { c =>
+          setMap.get(c) match {
+            case Some(v) =>
+              // the assigned value casts to the COLUMN's type (SQL UPDATE
+              // semantics — the table schema never changes under UPDATE)
+              when(cond, v.cast(cur.schema(c).dataType))
+                .otherwise(col(c)).as(c)
+            case None => col(c)
+          }
+        }: _*)
+        Staged(touched, stageData(out, dir, claim.gen, partCol, claim.tk,
+          statsCols, zorder, bloomCols))
       }
-      val slice = cur.filter(
-        valuesPred(partCol, touched, cur.schema(partCol).dataType))
-      val setMap = sets.toMap
-      val out = slice.select(cur.columns.toIndexedSeq.map { c =>
-        setMap.get(c) match {
-          case Some(v) =>
-            // the assigned value casts to the COLUMN's type (SQL UPDATE
-            // semantics — the table schema never changes under UPDATE)
-            when(cond, v.cast(cur.schema(c).dataType))
-              .otherwise(col(c)).as(c)
-          case None => col(c)
-        }
-      }: _*)
-      stageData(out, dir, gen, partCol, tk, statsCols, zorder, bloomCols)
-      writeManifest(spark, dir, gen, touched)
-      GenCommit.publish(spark, dir, gen, DataTable, tk, claimed = true)
-      writeLogCkptIfDue(spark, dir)
-    } catch {
-      case t: Throwable =>
-        val f = fsOf(spark, dir)
-        if (!f.exists(new org.apache.hadoop.fs.Path(
-            s"$dir/data/gen=$gen")))
-          GenCommit.releaseClaim(spark, dir, gen)
-        throw t
     }
   }
 
@@ -1710,13 +1735,11 @@ object GenTable {
       val touched = rows.select(col(partCol)).distinct()
         .collect().map(_.get(0)).toSeq
       if (touched.isEmpty) return
-      val tk = GenCommit.newToken()
-      val (base, gen) =
-        claimDisjoint(spark, dir, touched.map(enc).toSet, tk, "insertRows",
-          overlapWaitMs = overlapWaitMs)
-      try {
+      commitStatement(spark, dir, touched.map(enc).toSet, "insertRows",
+          overlapWaitMs) { claim =>
         // the pre-claim snapshot serves when no commit landed in between
-        val cur = readSnapshot(spark, pinnedAt(spark, pre, base))
+        val cur = readSnapshot(spark,
+          snapshotAt(spark, dir, partCol, claim, held = Some(pre)))
         val targetCols = cur.columns.toSeq
         require(targetCols.toSet == rows.columns.toSet,
           s"insertRows: the rows must carry exactly the table's columns " +
@@ -1726,18 +1749,8 @@ object GenTable {
           col(c).cast(cur.schema(c).dataType).as(c)): _*)
         val slice = cur.filter(
           valuesPred(partCol, touched, cur.schema(partCol).dataType))
-        stageData(slice.unionByName(aligned), dir, gen, partCol, tk,
-          statsCols, zorder, bloomCols)
-        writeManifest(spark, dir, gen, touched)
-        GenCommit.publish(spark, dir, gen, DataTable, tk, claimed = true)
-        writeLogCkptIfDue(spark, dir)
-      } catch {
-        case t: Throwable =>
-          val f = fsOf(spark, dir)
-          if (!f.exists(new org.apache.hadoop.fs.Path(
-              s"$dir/data/gen=$gen")))
-            GenCommit.releaseClaim(spark, dir, gen)
-          throw t
+        Some(Staged(touched, stageData(slice.unionByName(aligned), dir,
+          claim.gen, partCol, claim.tk, statsCols, zorder, bloomCols)))
       }
     } finally graft.Ckpt.free(rows)
   }
@@ -1768,12 +1781,9 @@ object GenTable {
     require(cols.nonEmpty, "addColumns: at least one column")
     val partCol = partColOf(spark, dir)
     val (stats, zo, blooms) = layoutOf(spark, dir)
-    val tk = GenCommit.newToken()
-    val (base, gen) =
-      claimDisjoint(spark, dir, Set(AllMark), tk, "addColumns",
-        overlapWaitMs = overlapWaitMs)
-    try {
-      val snap = snapshot(spark, dir, partCol, Some(base))
+    commitStatement(spark, dir, Set(AllMark), "addColumns",
+        overlapWaitMs) { claim =>
+      val snap = snapshotAt(spark, dir, partCol, claim)
       val (resolved, pinned) = (snap.claims, snap.schema)
       require(pinned.isDefined,
         s"addColumns: the table at $dir holds no rows — there is no " +
@@ -1815,18 +1825,9 @@ object GenTable {
       // footer column order = frame order minus the partition level, so
       // the new columns land AFTER the old payload — exactly where the
       // merge-evolution path puts them
-      stageData(widened, dir, gen, partCol, tk, stats, zo, blooms)
-      writeManifest(spark, dir, gen,
-        Seq(if (victim == NullMark) null else dec(victim)))
-      GenCommit.publish(spark, dir, gen, DataTable, tk, claimed = true)
-      writeLogCkptIfDue(spark, dir)
-    } catch {
-      case t: Throwable =>
-        val f = fsOf(spark, dir)
-        if (!f.exists(new org.apache.hadoop.fs.Path(
-            s"$dir/data/gen=$gen")))
-          GenCommit.releaseClaim(spark, dir, gen)
-        throw t
+      Some(Staged(Seq(if (victim == NullMark) null else dec(victim)),
+        stageData(widened, dir, claim.gen, partCol, claim.tk, stats, zo,
+          blooms)))
     }
   }
 
@@ -1883,7 +1884,8 @@ object GenTable {
     * created — burned its snapshot+1 claim, bricking a CDC stream's
     * replay until a full [[compact]]; this is the metadata-cost remedy).
     * Sweeps orphan stage dirs and the temp files of writers killed
-    * before their rename (`.zbounds.tmp_*`, `logckpts/.tmp_*`),
+    * before their rename (`.zbounds.tmp_*`, also left by a z-ordered
+    * statement that failed before committing, and `logckpts/.tmp_*`),
     * releases pre-stage claims ([[recoverClaims]]), then ROLLS BACK
     * every claimed-but-uncommitted generation that began publishing:
     * its gen dir (data and tombs alike) and manifest are deleted and
@@ -1910,8 +1912,9 @@ object GenTable {
           .filter(_.getPath.getName.startsWith(prefix))
           .foreach(t => f.delete(t.getPath, false))
     }
-    val marked = GenCommit.committed(spark, dir).toSet
-    val stale = GenCommit.claimedGens(spark, dir).filterNot(marked)
+    val listing = GenCommit.commitsListing(spark, dir)
+    val stale = GenCommit.claimedIn(listing)
+      .filterNot(GenCommit.committedIn(listing).toSet)
     val freed = stale.sorted.map { g =>
       AllTables.foreach { t =>
         f.delete(new org.apache.hadoop.fs.Path(s"$dir/$t/gen=$g"), true)
@@ -1963,7 +1966,11 @@ object GenTable {
     * pin (the fresh id) denotes the data the table held at compaction,
     * the lake VACUUM contract. Single-writer maintenance window, as with
     * every compactor; also the documented remedy for a claim burned by a
-    * mid-publish merge crash.
+    * mid-publish merge crash. The claim is taken by [[GenCommit
+    * .claimNextGen]], not [[claimDisjoint]] — the remedy for a crashed
+    * claim must not wait on that claim — and everything after it is the
+    * statements' [[publishGen]]: a failure before publishing releases the
+    * claim, so the table stays writable.
     */
   def compact(spark: SparkSession, dir: String, partCol: String,
       statsCols: Seq[String] = Nil, zorder: Boolean = false,
@@ -1974,19 +1981,18 @@ object GenTable {
     // loudly instead of racing the maintenance window
     val gen = GenCommit.claimNextGen(spark, dir, AllTables, token = tk,
       declare = Seq(AllMark))
-    val cur = read(spark, dir, partCol)
-    val live = cur.select(col(partCol)).distinct()
-      .collect().map(_.get(0)).toSeq
-    // compaction is the z-layout's DRIFT REMEDY (r20): it rewrites the
-    // whole table anyway, so drop the recorded quantile boundaries and
-    // let stageData re-record them over the full current view — one
-    // boundary pass per maintenance window, where per-statement writes
-    // keep reusing the record (see zorderBounds)
-    if (zorder) fsOf(spark, dir).delete(
-      new org.apache.hadoop.fs.Path(s"$dir/zbounds"), false)
-    stageData(cur, dir, gen, partCol, tk, statsCols, zorder, bloomCols)
-    writeManifest(spark, dir, gen, live)
-    GenCommit.publish(spark, dir, gen, DataTable, tk, claimed = true)
+    val live = publishGen(spark, dir, gen, tk, "data") {
+      val cur = read(spark, dir, partCol)
+      val live = cur.select(col(partCol)).distinct()
+        .collect().map(_.get(0)).toSeq
+      // compaction is the z-layout's DRIFT REMEDY (r20): it rewrites the
+      // whole table anyway, so it re-records the quantile boundaries over
+      // the full current view (`rezone`) — one boundary pass per
+      // maintenance window, where per-statement writes keep reusing the
+      // record (see zorderBounds)
+      Some(Staged(live, stageData(cur, dir, gen, partCol, tk, statsCols,
+        zorder, bloomCols, rezone = true)))
+    }.fold(Seq.empty[Any])(_.values)
     // committed set → {gen} FIRST: from here no reader dereferences any
     // old manifest or generation dir, so the GC below removes only
     // unreachable state at every crash point

@@ -25,10 +25,10 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * parquet, whole-stage codegen, filter pushdown into footers) — it
   * only needs to be told WHICH files. So the connector is a custom
   * [[FileIndex]] ([[GenFileIndex]]: the winning files of one
-  * [[GenTable.snapshot]] + min/max and bloom file skipping through
-  * [[GenTable.Sidecars]], all driver-side metadata) handed to Spark's
-  * own [[HadoopFsRelation]] — the same relation [[GenTable.read]]
-  * scans. A DataSource V2
+  * [[GenTable.snapshot]] + min/max and bloom file skipping through the
+  * snapshot's [[GenTable.Sidecars]], all driver-side metadata) handed to
+  * Spark's own [[HadoopFsRelation]] — the same relation
+  * [[GenTable.read]] scans. A DataSource V2
   * `TableProvider` would instead force a hand-rolled
   * `PartitionReaderFactory` — reimplementing the vectorized parquet
   * reader or dropping to row-at-a-time — which is why Delta Lake's own
@@ -260,8 +260,6 @@ private[sources] class GenFileIndex(
   private def row(p: GenTable.Snapshot.Part): InternalRow =
     if (withGen) InternalRow(p.gen, p.value) else InternalRow(p.value)
 
-  private val sidecars = new GenTable.Sidecars(spark, snap.dir)
-
   override def rootPaths: Seq[org.apache.hadoop.fs.Path] =
     Seq(new org.apache.hadoop.fs.Path(s"${snap.dir}/data"))
 
@@ -286,7 +284,7 @@ private[sources] class GenFileIndex(
     dataFilters.flatMap(rangeBounds)
       .filter { case (c, _, _) => dataSchema.fieldNames.contains(c) }
       .foldLeft(partPruned) { case (ps, (c, lo, hi)) =>
-        sidecars.admit(ps, c, dataSchema(c).dataType, lo, hi) }
+        snap.sidecars.admit(ps, c, dataSchema(c).dataType, lo, hi) }
       .map(p => PartitionDirectory(row(p), p.files.toArray))
   }
 

@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions.{col, lit}
   *  - build: replace the store's directory, stage generation 0, publish
   *    (the publish takes the claim — the builder owns the fresh dir);
   *  - append: claim-first [[GenCommit.claimNextGen]] over the scan
-  *    tables → staged writes → [[GenCommit.publish]] with `claimed`;
+  *    tables → staged writes → [[GenCommit.publish]] with `claimed`, the
+  *    two run by [[GenCommit.withClaim]] (a failure before publishing
+  *    releases the claim);
   *  - delete: one generation of distinct ids in [[GenCommit.TombsTable]];
   *  - compact: recover → [[GenCommit.gcStages]] → keepGen = the highest
   *    committed id → per table, the fold written to its
@@ -62,41 +64,32 @@ final case class StandingStore(
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def commit(spark: SparkSession, dir: String, gen: Long,
-      token: String, claimed: Boolean, staged: Seq[String])(
-      stage: (String => String) => Unit): Unit = {
-    stage(t => GenCommit.stagePath(dir, gen, t, token))
-    GenCommit.publish(spark, dir, gen, staged, token, claimed)
-  }
-
   /** Replace whatever is at `dir` with generation 0. `stage` writes the
     * store's metadata and each table in `staged` at `path(table)`.
     */
   def build(spark: SparkSession, dir: String, staged: Seq[String] = tables)(
       stage: (String => String) => Unit): Unit = {
     fs(spark, dir).delete(new org.apache.hadoop.fs.Path(dir), true)
-    commit(spark, dir, 0L, GenCommit.newToken(), claimed = false, staged)(
-      stage)
+    val tk = GenCommit.newToken()
+    stage(t => GenCommit.stagePath(dir, 0L, t, tk))
+    GenCommit.publish(spark, dir, 0L, staged, tk)
   }
 
   /** Commit one new generation of `staged`, claim first: the id is fenced
     * before the staged writes, so losing a race with a concurrent writer
     * costs a metadata retry, never a re-staged write job, and the claim
-    * records the writer's token so publish verifies ownership.
+    * records the writer's token so publish verifies ownership. A failure
+    * before publishing releases the claim ([[GenCommit.withClaim]]).
     */
   def append(spark: SparkSession, dir: String, staged: Seq[String] = tables)(
       stage: (String => String) => Unit): Unit = {
     val tk = GenCommit.newToken()
     val gen = GenCommit.claimNextGen(spark, dir, scanTables, token = tk)
-    commit(spark, dir, gen, tk, claimed = true, staged)(stage)
+    GenCommit.withClaim(spark, dir, gen, staged) {
+      stage(t => GenCommit.stagePath(dir, gen, t, tk))
+      Some(GenCommit.publish(spark, dir, gen, staged, tk, claimed = true))
+    }
   }
-
-  /** Commit generation `gen`, which the caller already claimed with
-    * `token` ([[graft.ops.ClusterStore.merge]]'s compare-and-swap).
-    */
-  def commitClaimed(spark: SparkSession, dir: String, gen: Long,
-      token: String)(stage: (String => String) => Unit): Unit =
-    commit(spark, dir, gen, token, claimed = true, tables)(stage)
 
   /** Tombstone delete: one generation holding the distinct ids of `ids`
     * (column `idCol`) in the shared tombs table. `also` names further

@@ -218,6 +218,36 @@ class GenTableSnapshotSpec extends SparkSuite {
     def listed(p: String) = lists.count(_ == s"$root/ledger$p")
     assert(listed("") == 1 && listed("/_consumed") == 1, lists.mkString("\n"))
   }
+
+  test("each write statement lists commits/ once — the claim's listing " +
+      "serves its snapshot and its checkpoint decision; insertRows adds " +
+      "its pre-claim schema check") {
+    useCountingFs()
+    val root = TempRoots.create("graft_snap_commits_")
+    val dir = s"counting://$root/t"
+    GenTable.init(fixture(), dir, "p")                                 // 0
+    def commitsLists(statement: => Unit): Int = {
+      CountingFs.reset()
+      statement
+      CountingFs.calls.count(_ == ("list" -> s"$root/t/commits"))
+    }
+    val merge = commitsLists(GenTable.merge(spark, dir, "p",          // 1
+      Seq((6L, "A", 60.0, "upsert")).toDF("k", "p", "v", "_op"), Seq("k")))
+    val update = commitsLists(GenTable.updateWhere(spark, dir, "p",   // 2
+      col("k") === 3L, Seq("v" -> lit(33.0))))
+    val delete = commitsLists(                                         // 3
+      GenTable.deleteRows(spark, dir, Seq(4L).toDF("k")))
+    val add = commitsLists(GenTable.addColumns(spark, dir,            // 4
+      Seq("w" -> org.apache.spark.sql.types.IntegerType)))
+    val insert = commitsLists(GenTable.insertRows(spark, dir, "p",    // 5
+      Seq((7L, "C", 70.0, Option.empty[Int])).toDF("k", "p", "v", "w")))
+    assert((merge, update, delete, add, insert) == ((1, 1, 1, 1, 2)))
+    assert(GenCommit.committed(spark, dir) == (0L to 5L))
+    assert(GenTable.read(spark, dir, "p").select("k", "v").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toSet ==
+      Set(1L -> 10.0, 2L -> 20.0, 3L -> 33.0, 5L -> 50.0, 6L -> 60.0,
+        7L -> 70.0))
+  }
 }
 
 /** The local file system under the `counting:` scheme, recording every
